@@ -5,8 +5,10 @@ storage files "copied to Snowflake" (add_output.py:421 docstring,
 cloudStorageConnection add_output.py:438) — i.e. stage + COPY INTO — and
 applies upsert/delete semantics server-side. The Spark-native equivalent:
 
-1. ``foreachBatch``: reduce the batch to latest-by-key (cuts MERGE input
-   to ≤1 row/key), write it to a stage path as parquet;
+1. ``write_batch``: reduce the batch to latest-by-key (cuts MERGE input
+   to ≤1 row/key), write it to a stage path as parquet — the sink owns
+   the reduce, the same contract as ``ParquetSnapshotSink.merge``, so
+   callers pass raw changes;
 2. issue ``COPY INTO <staging table>`` then one ``MERGE INTO`` statement
    (WHEN MATCHED AND is_delete THEN DELETE / WHEN MATCHED THEN UPDATE /
    WHEN NOT MATCHED AND NOT is_delete THEN INSERT) over the staging table.
@@ -23,6 +25,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from snowflake_cdc_spark.operators.upsert import latest_by_key
 
 try:  # pragma: no cover - connector not present in the test environment
     import snowflake.connector  # noqa: F401
@@ -141,15 +145,18 @@ class SnowflakeMergeSink:
 
     def write_batch(
         self,
-        latest: DataFrame,
+        changes: DataFrame,
         table: str,
         key_cols: list[str],
         batch_id: int,
         hard_delete: bool = True,
         prefer_incoming_on_tie: bool = False,
     ) -> list[str]:
-        import pyspark.sql.types as T
-
+        """Stage one batch of change rows (any number of versions per
+        key, ordered by ``seq``) and return the COPY + MERGE statements
+        that apply it. A MERGE needs at most one source row per key, so
+        the batch is reduced here first."""
+        latest = latest_by_key(changes, key_cols, "seq")
         stage_path = f"{self.stage_root}/{table.upper()}/batch={batch_id}"
         latest.write.mode("overwrite").parquet(stage_path)
         tgt = self._qualified(table)

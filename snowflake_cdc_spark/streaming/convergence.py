@@ -75,6 +75,25 @@ class ConvergenceMonitor:
         """Diff two retained snapshot versions and log the report.
         ``from_version < 0`` (first merge) diffs against the empty
         relation — everything counts as added."""
+        rows = self.diff_records(
+            spark, table, batch_id, from_version, to_version, key_cols
+        )
+        self.records += rows
+        return {metric: n for *_, metric, n in rows}
+
+    def diff_records(
+        self,
+        spark: SparkSession,
+        table: str,
+        batch_id: int,
+        from_version: int,
+        to_version: int,
+        key_cols: list[str],
+    ) -> list[tuple[str, int, int, int, str, int]]:
+        """``record`` without the in-memory append: computes the report,
+        writes the parquet log, and returns the ledger rows. Safe to run
+        for several tables at once; ``CdcPipeline`` appends the rows to
+        ``records`` in spec order itself."""
         new = self.sink.read_version(spark, table, to_version)
         old = (
             new.limit(0)
@@ -82,17 +101,13 @@ class ConvergenceMonitor:
             else self.sink.read_version(spark, table, from_version)
         )
         report = table_diff(old, new, key_cols)
-        rows = {r.metric: r.n for r in report.collect()}
-        for metric, n in sorted(rows.items()):
-            self.records.append(
-                (table, batch_id, from_version, to_version, metric, int(n))
-            )
+        rows = [
+            (table, batch_id, from_version, to_version, r.metric, int(r.n))
+            for r in sorted(report.collect(), key=lambda r: r.metric)
+        ]
         if self.log_dir:
             out = spark.createDataFrame(
-                [
-                    (table, batch_id, from_version, to_version, m, int(n))
-                    for m, n in sorted(rows.items())
-                ],
+                rows,
                 "table string, batch_id int, from_version int, "
                 "to_version int, metric string, n bigint",
             )

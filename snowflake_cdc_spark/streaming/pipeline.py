@@ -12,20 +12,28 @@ per micro-batch. The reference loops table-by-table at the control plane
 only (add_output.py:540-561); data-plane fan-out is per micro-batch here.
 
 Scale posture:
-- the batch is ``persist()``-ed before the per-table loop (each table's
-  filter re-reads memory, not the source);
-- each table's changes are pre-reduced to latest-by-key *before* the
-  sink merge (map-side combine — the merge joins ≤1 row/key);
-- demux filter is a pushed-down equality predicate on
-  ``full_table_name`` (P1), so with a source partitioned by table the
-  scan prunes to that table's files.
+- the shard-merged table identity (``actual_full_table_name``, a
+  regexp per row) is computed ONCE per batch, as a column added before
+  the batch is ``persist()``-ed; each table's demux filter is then an
+  equality on that cached column, and re-reads memory, not the source;
+- the sink merge is each table's only hash exchange per batch: its
+  ``latest_by_key`` over current ∪ changes combines map-side (partial
+  ``max_by`` before the shuffle), so the pipeline does not pre-reduce;
+- the per-table chains (transform → DQ gate → merge → convergence
+  record) run concurrently, ``min(tables, defaultParallelism)`` at a
+  time, as jobs over the shared cached batch (the Structured Streaming
+  posture of one micro-batch = concurrent jobs over one input). The
+  generation publish is the single join point after every chain has
+  settled.
 """
 
 from __future__ import annotations
 
 import time
-from dataclasses import dataclass
+from concurrent.futures import ThreadPoolExecutor
+from dataclasses import dataclass, field
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -68,9 +76,47 @@ class MaintenancePolicy:
     keep_generations: int = 8
 
 
+# Demux identity of shard-merged specs, computed once per batch by
+# ``with_table_identity`` (README.md:29-31: ``_part_<N>`` stripped).
+TABLE_IDENTITY = "__table"
+
+
+def with_table_identity(events: DataFrame) -> DataFrame:
+    """``events`` plus the shard-merged table identity as a top-level
+    column — the one place the per-row regexp runs. ``transform``
+    filters on it, so every events relation it sees comes through here."""
+    return events.withColumn(
+        TABLE_IDENTITY,
+        actual_full_table_name(F.col("data.database_name"), F.col("data.table_name")),
+    )
+
+
+@dataclass
+class _TableResult:
+    """What one table's chain adds to the pipeline's ledgers. Chains
+    run concurrently; the caller appends these in spec order once every
+    chain has settled, so the ledgers do not depend on completion
+    order. ``error`` is a failure the ``fail_on_write_error`` policy
+    re-raises."""
+
+    metrics: list[BatchMetric] = field(default_factory=list)
+    write_errors: list[tuple[str, int, str]] = field(default_factory=list)
+    dq_violations: list[tuple[str, int, int]] = field(default_factory=list)
+    convergence: list[tuple] = field(default_factory=list)
+    error: Exception | None = None
+
+
 class CdcPipeline:
     """Materialize one multiplexed CDC envelope stream into per-table
-    snapshots according to a list of PipelineSpecs."""
+    snapshots according to a list of PipelineSpecs.
+
+    Each batch runs the per-table chains concurrently, then publishes
+    one generation. Under ``fail_on_write_error`` the batch raises the
+    first failing table's error in spec order and publishes no
+    generation, but healthy tables' chains have run to completion and
+    may already have flipped their ``_CURRENT``. That is safe: the
+    seq-guarded merge is idempotent, so the batch's replay re-applies
+    the same changes to those tables as a no-op."""
 
     def __init__(
         self,
@@ -146,16 +192,12 @@ class CdcPipeline:
     def transform(self, events: DataFrame, spec: PipelineSpec) -> DataFrame:
         """envelope events → flat change rows for one table.
 
-        Filter on the shard-merged table identity (README.md:29-31), then
+        ``events`` must come through ``with_table_identity``. Filter on
+        the shard-merged table identity (README.md:29-31), then
         star-expand ``data.row`` (README.md:34) plus the key/seq/delete
         metadata columns.
         """
-        if spec.merge_shards:
-            ident = actual_full_table_name(
-                F.col("data.database_name"), F.col("data.table_name")
-            )
-        else:
-            ident = F.col("data.full_table_name")
+        ident = F.col(TABLE_IDENTITY if spec.merge_shards else "data.full_table_name")
         filtered = events.filter(ident == F.lit(spec.full_table_name))
         # S2 AtTime replay horizon, PER SPEC: each table in a shared
         # pipeline can start from its own timestamp (a global filter would
@@ -222,97 +264,40 @@ class CdcPipeline:
         """Apply one batch of envelope events to every table snapshot.
         ``prefer_incoming_on_tie`` is set only by the E3 drift backfill,
         which replays already-applied seqs carrying new columns; normal
-        batches leave it off so redeliveries can never regress a row."""
-        events = events.persist()
-        try:
-            for spec in self.specs:
-                changes = self.transform(events, spec)
-                exps = self.dq_expectations.get(spec.target_table)
-                if exps:
-                    from snowflake_cdc_spark.operators.expectations import row_gate
+        batches leave it off so redeliveries can never regress a row.
 
-                    changes, bad = row_gate(
-                        changes, exps, exempt=F.col("is_delete")
+        The table chains run on a thread pool; each worker inherits the
+        caller's Spark local properties (a streaming query's job group,
+        so stopping the query cancels the chains' jobs too)."""
+        events = with_table_identity(events).persist()
+        try:
+            width = min(len(self.specs), self.spark.sparkContext.defaultParallelism)
+            with ThreadPoolExecutor(max(width, 1), thread_name_prefix="cdc-table") as pool:
+                # wrap per chain: each gets its own copy of the properties
+                futures = [
+                    pool.submit(
+                        inheritable_thread_target(self.spark)(self._materialize_table),
+                        events, spec, batch_id, prefer_incoming_on_tie,
                     )
-                    # persist before count+write: otherwise the
-                    # transform+gate plan executes twice per violating
-                    # table per micro-batch (events is cached but the
-                    # flatten/gate work above it is not)
-                    bad = bad.persist()
-                    try:
-                        n_bad = bad.count()
-                        if n_bad:
-                            bad.write.mode("overwrite").parquet(
-                                f"{self.quarantine_dir}/{spec.target_table}/dq_batch={batch_id}"
-                            )
-                            self.dq_violations.append(
-                                (spec.target_table, batch_id, n_bad)
-                            )
-                    finally:
-                        bad.unpersist()
-                keys = self._key_cols(spec)
-                # pre-reduce before the sink merge: ≤1 row/key enters MERGE
-                reduced = latest_by_key(changes, keys, "seq")
-                try:
-                    t0 = time.perf_counter()
-                    from_v = self.sink.current_version(spec.target_table)
-                    version = self.sink.merge(
-                        reduced,
-                        spec.target_table,
-                        key_cols=keys,
-                        seq_col="seq",
-                        delete_col="is_delete",
-                        hard_delete=spec.delete_strategy is DeleteStrategy.HARD,
-                        logical_col=spec.logical_delete_col,
-                        prefer_incoming_on_tie=prefer_incoming_on_tie,
-                    )
-                    self.metrics.append(
-                        BatchMetric(
-                            spec.target_table,
-                            batch_id,
-                            int(version or 0),
-                            round(time.perf_counter() - t0, 3),
-                        )
-                    )
-                    if self.convergence is not None:
-                        try:
-                            self.convergence.record(
-                                self.spark,
-                                spec.target_table,
-                                batch_id,
-                                from_v,
-                                int(version or 0),
-                                keys,
-                            )
-                        except Exception as ce:  # noqa: BLE001 - policy
-                            if self.fail_on_write_error:
-                                raise
-                            self.write_errors.append(
-                                (
-                                    spec.target_table,
-                                    batch_id,
-                                    f"convergence monitor failed: {ce}",
-                                )
-                            )
-                except Exception as e:  # noqa: BLE001 - policy decides
-                    if self.fail_on_write_error:
-                        raise
-                    self.write_errors.append((spec.target_table, batch_id, str(e)))
-                    if self.quarantine_dir:
-                        # the quarantine write re-executes the failing plan;
-                        # if the failure is in the data itself (not the
-                        # sink), this raises again — and must not take the
-                        # other tables (or the stream) down with it
-                        try:
-                            reduced.write.mode("overwrite").parquet(
-                                f"{self.quarantine_dir}/{spec.target_table}/batch={batch_id}"
-                            )
-                        except Exception as qe:  # noqa: BLE001
-                            self.write_errors.append(
-                                (spec.target_table, batch_id, f"quarantine failed: {qe}")
-                            )
+                    for spec in self.specs
+                ]
         finally:
             events.unpersist()
+        first_error: BaseException | None = None
+        for fut in futures:
+            # transform / DQ-gate failures propagate whatever the policy
+            if (exc := fut.exception()) is not None:
+                first_error = first_error or exc
+                continue
+            res = fut.result()
+            self.metrics += res.metrics
+            self.write_errors += res.write_errors
+            self.dq_violations += res.dq_violations
+            if self.convergence is not None:
+                self.convergence.records += res.convergence
+            first_error = first_error or res.error
+        if first_error is not None:
+            raise first_error
         self._publish_generation(batch_id)
         self._batches_applied += 1
         if (
@@ -320,6 +305,90 @@ class CdcPipeline:
             and self._batches_applied % self.maintenance.every_n_batches == 0
         ):
             self._run_maintenance(batch_id)
+
+    def _materialize_table(
+        self,
+        events: DataFrame,
+        spec: PipelineSpec,
+        batch_id: int,
+        prefer_incoming_on_tie: bool,
+    ) -> _TableResult:
+        """One table's chain: transform → DQ gate → merge → convergence
+        record. Runs on a pool thread; touches no pipeline ledger."""
+        res = _TableResult()
+        table = spec.target_table
+        changes = self.transform(events, spec)
+        exps = self.dq_expectations.get(table)
+        if exps:
+            from snowflake_cdc_spark.operators.expectations import row_gate
+
+            changes, bad = row_gate(changes, exps, exempt=F.col("is_delete"))
+            # persist before count+write: otherwise the transform+gate
+            # plan executes twice per violating table per micro-batch
+            # (events is cached but the flatten/gate work above it is not)
+            bad = bad.persist()
+            try:
+                n_bad = bad.count()
+                if n_bad:
+                    bad.write.mode("overwrite").parquet(
+                        f"{self.quarantine_dir}/{table}/dq_batch={batch_id}"
+                    )
+                    res.dq_violations.append((table, batch_id, n_bad))
+            finally:
+                bad.unpersist()
+        keys = self._key_cols(spec)
+        try:
+            t0 = time.perf_counter()
+            from_v = self.sink.current_version(table)
+            # raw changes: the merge's own reduce is this table's only
+            # exchange
+            version = int(
+                self.sink.merge(
+                    changes,
+                    table,
+                    key_cols=keys,
+                    seq_col="seq",
+                    delete_col="is_delete",
+                    hard_delete=spec.delete_strategy is DeleteStrategy.HARD,
+                    logical_col=spec.logical_delete_col,
+                    prefer_incoming_on_tie=prefer_incoming_on_tie,
+                )
+                or 0
+            )
+            res.metrics.append(
+                BatchMetric(table, batch_id, version, round(time.perf_counter() - t0, 3))
+            )
+            if self.convergence is not None:
+                try:
+                    res.convergence = self.convergence.diff_records(
+                        self.spark, table, batch_id, from_v, version, keys
+                    )
+                except Exception as ce:  # noqa: BLE001 - policy
+                    if self.fail_on_write_error:
+                        raise
+                    res.write_errors.append(
+                        (table, batch_id, f"convergence monitor failed: {ce}")
+                    )
+        except Exception as e:  # noqa: BLE001 - policy decides
+            if self.fail_on_write_error:
+                res.error = e
+                return res
+            res.write_errors.append((table, batch_id, str(e)))
+            if self.quarantine_dir:
+                # the raw changes: replay_quarantine reduces them. The
+                # write re-executes the failing plan; if the failure is
+                # in the data itself (not the sink), this raises again —
+                # and must not take the other tables (or the stream)
+                # down with it
+                try:
+                    changes.write.mode("overwrite").parquet(
+                        f"{self.quarantine_dir}/{table}/batch={batch_id}"
+                    )
+                except Exception as qe:  # noqa: BLE001
+                    res.write_errors.append(
+                        (table, batch_id, f"quarantine failed: {qe}")
+                    )
+        return res
 
     def _publish_generation(self, batch_id: int) -> None:
         """Atomic multi-table publish (VERDICT r08 #3): after every
@@ -430,6 +499,7 @@ class CdcPipeline:
             snapshot_logical_delete,
         )
 
+        events = with_table_identity(events)
         out: dict[str, DataFrame] = {}
         for spec in self.specs:
             changes = self.transform(events, spec).filter(

@@ -16,7 +16,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from snowflake_cdc_spark.operators.upsert import (
-    latest_by_key,
     snapshot_hard_delete,
     snapshot_logical_delete,
 )
@@ -56,9 +55,9 @@ def _run_batches(spark, tmp_path, batch_dfs, hard_delete):
     con = duckdb.connect()
     sink = SnowflakeMergeSink(str(tmp_path / ("hard" if hard_delete else "logical")))
     for i, b in enumerate(batch_dfs):
-        latest = latest_by_key(b, ["primary_key"], "seq").select(*DATA_COLS)
         stmts = sink.write_batch(
-            latest, "orders_snap", ["primary_key"], batch_id=i, hard_delete=hard_delete
+            b.select(*DATA_COLS), "orders_snap", ["primary_key"], batch_id=i,
+            hard_delete=hard_delete,
         )
         execute_snowflake_sql(con, stmts)
     return con, sink
@@ -74,7 +73,7 @@ def test_hard_delete_sql_matches_relational_merge(spark, tmp_path, batches):
     assert got_cols == want_cols
     assert got == want
     # replay the final batch verbatim: the seq guard must make it a no-op
-    last = latest_by_key(batch_dfs[-1], ["primary_key"], "seq").select(*DATA_COLS)
+    last = batch_dfs[-1].select(*DATA_COLS)
     stmts = sink.write_batch(last, "orders_snap", ["primary_key"], batch_id=99, hard_delete=True)
     execute_snowflake_sql(con, stmts)
     assert _warehouse_rows(con, "ORDERS_SNAP")[0] == got
@@ -87,6 +86,23 @@ def test_logical_delete_sql_matches_relational_merge(spark, tmp_path, batches):
     want, want_cols = _spark_rows(
         snapshot_logical_delete(log, ["primary_key"], "seq")
     )
+    assert got_cols == want_cols
+    assert got == want
+
+
+@pytest.mark.parametrize("hard_delete", [True, False])
+def test_write_batch_reduces_unreduced_batches(spark, tmp_path, batches, hard_delete):
+    """The sink owns the reduce (the merge contract it shares with
+    ``ParquetSnapshotSink.merge``): raw batches holding several versions
+    of a key — inserts and updates together, then the deletes — land
+    the same warehouse as the relational snapshot of the full log."""
+    log, (inserts, updates, deletes) = batches
+    raw = [inserts.unionByName(updates), deletes]
+    assert raw[0].count() > raw[0].select("primary_key").distinct().count()
+    con, _ = _run_batches(spark, tmp_path, raw, hard_delete)
+    got, got_cols = _warehouse_rows(con, "ORDERS_SNAP")
+    snapshot = snapshot_hard_delete if hard_delete else snapshot_logical_delete
+    want, want_cols = _spark_rows(snapshot(log, ["primary_key"], "seq"))
     assert got_cols == want_cols
     assert got == want
 
@@ -119,9 +135,8 @@ def test_streaming_foreachbatch_to_warehouse(spark, tmp_path, batches):
     sink = SnowflakeMergeSink(str(tmp_path / "stage"))
 
     def to_warehouse(batch_df, batch_id):
-        latest = latest_by_key(batch_df, ["primary_key"], "seq").select(*DATA_COLS)
         stmts = sink.write_batch(
-            latest, "orders_snap", ["primary_key"],
+            batch_df, "orders_snap", ["primary_key"],
             batch_id=batch_id, hard_delete=True,
         )
         execute_snowflake_sql(con, stmts)
