@@ -12,17 +12,16 @@ per micro-batch. The reference loops table-by-table at the control plane
 only (add_output.py:540-561); data-plane fan-out is per micro-batch here.
 
 Scale posture:
-- the shard-merged table identity (``actual_full_table_name``, a
-  regexp per row) is computed ONCE per batch, as a column added before
-  the batch is ``persist()``-ed; each table's demux filter is then an
-  equality on that cached column, and re-reads memory, not the source;
+- the batch is ``persist()``-ed before the per-table chains (each
+  table's demux filter re-reads memory, not the source);
 - the sink merge is each table's only hash exchange per batch: its
   ``latest_by_key`` over current ∪ changes combines map-side (partial
   ``max_by`` before the shuffle), so the pipeline does not pre-reduce;
 - the per-table chains (transform → DQ gate → merge → convergence
   record) run concurrently, ``min(tables, defaultParallelism)`` at a
   time, as jobs over the shared cached batch (the Structured Streaming
-  posture of one micro-batch = concurrent jobs over one input). The
+  posture of one micro-batch = concurrent jobs over one input). Specs
+  sharing a target table form one chain and merge in spec order. The
   generation publish is the single join point after every chain has
   settled.
 """
@@ -76,28 +75,14 @@ class MaintenancePolicy:
     keep_generations: int = 8
 
 
-# Demux identity of shard-merged specs, computed once per batch by
-# ``with_table_identity`` (README.md:29-31: ``_part_<N>`` stripped).
-TABLE_IDENTITY = "__table"
-
-
-def with_table_identity(events: DataFrame) -> DataFrame:
-    """``events`` plus the shard-merged table identity as a top-level
-    column — the one place the per-row regexp runs. ``transform``
-    filters on it, so every events relation it sees comes through here."""
-    return events.withColumn(
-        TABLE_IDENTITY,
-        actual_full_table_name(F.col("data.database_name"), F.col("data.table_name")),
-    )
-
-
 @dataclass
 class _TableResult:
-    """What one table's chain adds to the pipeline's ledgers. Chains
-    run concurrently; the caller appends these in spec order once every
+    """What one spec adds to the pipeline's ledgers. Target chains run
+    concurrently; the caller appends these in spec order once every
     chain has settled, so the ledgers do not depend on completion
-    order. ``error`` is a failure the ``fail_on_write_error`` policy
-    re-raises."""
+    order. ``error`` is a failure the batch re-raises: a merge failure
+    under ``fail_on_write_error``, or a transform / DQ-gate failure
+    under either policy."""
 
     metrics: list[BatchMetric] = field(default_factory=list)
     write_errors: list[tuple[str, int, str]] = field(default_factory=list)
@@ -110,10 +95,10 @@ class CdcPipeline:
     """Materialize one multiplexed CDC envelope stream into per-table
     snapshots according to a list of PipelineSpecs.
 
-    Each batch runs the per-table chains concurrently, then publishes
-    one generation. Under ``fail_on_write_error`` the batch raises the
-    first failing table's error in spec order and publishes no
-    generation, but healthy tables' chains have run to completion and
+    Each batch runs one chain per target table, concurrently, then
+    publishes one generation. Under ``fail_on_write_error`` the batch
+    raises the first failing table's error in spec order and publishes
+    no generation, but healthy tables' chains have run to completion and
     may already have flipped their ``_CURRENT``. That is safe: the
     seq-guarded merge is idempotent, so the batch's replay re-applies
     the same changes to those tables as a no-op."""
@@ -192,12 +177,16 @@ class CdcPipeline:
     def transform(self, events: DataFrame, spec: PipelineSpec) -> DataFrame:
         """envelope events → flat change rows for one table.
 
-        ``events`` must come through ``with_table_identity``. Filter on
-        the shard-merged table identity (README.md:29-31), then
+        Filter on the shard-merged table identity (README.md:29-31), then
         star-expand ``data.row`` (README.md:34) plus the key/seq/delete
         metadata columns.
         """
-        ident = F.col(TABLE_IDENTITY if spec.merge_shards else "data.full_table_name")
+        if spec.merge_shards:
+            ident = actual_full_table_name(
+                F.col("data.database_name"), F.col("data.table_name")
+            )
+        else:
+            ident = F.col("data.full_table_name")
         filtered = events.filter(ident == F.lit(spec.full_table_name))
         # S2 AtTime replay horizon, PER SPEC: each table in a shared
         # pipeline can start from its own timestamp (a global filter would
@@ -269,27 +258,32 @@ class CdcPipeline:
         The table chains run on a thread pool; each worker inherits the
         caller's Spark local properties (a streaming query's job group,
         so stopping the query cancels the chains' jobs too)."""
-        events = with_table_identity(events).persist()
+        # one chain per target table: specs sharing a target (E4 extra
+        # keys, or one table name under two schemas) merge one after
+        # another in spec order, as each reads the version the last wrote
+        targets: dict[str, list[int]] = {}
+        for i, spec in enumerate(self.specs):
+            targets.setdefault(spec.target_table, []).append(i)
+        events = events.persist()
         try:
-            width = min(len(self.specs), self.spark.sparkContext.defaultParallelism)
+            width = min(len(targets), self.spark.sparkContext.defaultParallelism)
             with ThreadPoolExecutor(max(width, 1), thread_name_prefix="cdc-table") as pool:
                 # wrap per chain: each gets its own copy of the properties
                 futures = [
                     pool.submit(
-                        inheritable_thread_target(self.spark)(self._materialize_table),
-                        events, spec, batch_id, prefer_incoming_on_tie,
+                        inheritable_thread_target(self.spark)(self._materialize_target),
+                        events, idx, batch_id, prefer_incoming_on_tie,
                     )
-                    for spec in self.specs
+                    for idx in targets.values()
                 ]
+                results: dict[int, _TableResult] = {}
+                for fut in futures:
+                    results.update(fut.result())
         finally:
             events.unpersist()
-        first_error: BaseException | None = None
-        for fut in futures:
-            # transform / DQ-gate failures propagate whatever the policy
-            if (exc := fut.exception()) is not None:
-                first_error = first_error or exc
-                continue
-            res = fut.result()
+        first_error: Exception | None = None
+        for i in sorted(results):
+            res = results[i]
             self.metrics += res.metrics
             self.write_errors += res.write_errors
             self.dq_violations += res.dq_violations
@@ -306,6 +300,28 @@ class CdcPipeline:
         ):
             self._run_maintenance(batch_id)
 
+    def _materialize_target(
+        self,
+        events: DataFrame,
+        spec_idx: list[int],
+        batch_id: int,
+        prefer_incoming_on_tie: bool,
+    ) -> dict[int, _TableResult]:
+        """One target table's chain: its specs in spec order, stopping at
+        the first error the batch will raise. Keyed by spec index."""
+        out: dict[int, _TableResult] = {}
+        for i in spec_idx:
+            try:
+                res = self._materialize_table(
+                    events, self.specs[i], batch_id, prefer_incoming_on_tie
+                )
+            except Exception as e:  # noqa: BLE001 - transform / DQ gate:
+                res = _TableResult(error=e)  # raised whatever the policy
+            out[i] = res
+            if res.error is not None:
+                break
+        return out
+
     def _materialize_table(
         self,
         events: DataFrame,
@@ -313,7 +329,7 @@ class CdcPipeline:
         batch_id: int,
         prefer_incoming_on_tie: bool,
     ) -> _TableResult:
-        """One table's chain: transform → DQ gate → merge → convergence
+        """One spec's steps: transform → DQ gate → merge → convergence
         record. Runs on a pool thread; touches no pipeline ledger."""
         res = _TableResult()
         table = spec.target_table
@@ -499,7 +515,6 @@ class CdcPipeline:
             snapshot_logical_delete,
         )
 
-        events = with_table_identity(events)
         out: dict[str, DataFrame] = {}
         for spec in self.specs:
             changes = self.transform(events, spec).filter(
@@ -515,7 +530,12 @@ class CdcPipeline:
                     "seq",
                     logical_col=spec.logical_delete_col or "is_deleted",
                 )
-            out[spec.target_table] = snap
+            # specs sharing a target (E4) hold disjoint keys: the target's
+            # cut is their union, as the merges build it
+            prev = out.get(spec.target_table)
+            out[spec.target_table] = (
+                snap if prev is None else prev.unionByName(snap, allowMissingColumns=True)
+            )
         return out
 
     def run_batch(self, source_path: str, event_time_col: str | None = None) -> None:

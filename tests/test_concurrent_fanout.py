@@ -22,7 +22,6 @@ from snowflake_cdc_spark.sources.cdc import envelope_schema
 from snowflake_cdc_spark.streaming.pipeline import (
     CdcPipeline,
     replay_quarantine,
-    with_table_identity,
 )
 
 ROW = T.StructType(
@@ -170,7 +169,7 @@ def test_ledgers_follow_spec_order_not_completion_order(spark, events, tmp_path)
     assert sink.manifest() == {"T0": 0, "T3": 0}
     # the quarantine holds the raw changes, several versions per key
     q = spark.read.parquet(str(tmp_path / "q" / "T1" / "batch=5"))
-    assert q.count() == pipe.transform(with_table_identity(events), specs[1]).count()
+    assert q.count() == pipe.transform(events, specs[1]).count()
     assert q.count() > q.select("id").distinct().count()
 
 
@@ -272,3 +271,66 @@ def test_stream_stopped_mid_batch_terminates_cleanly(spark, events, tmp_path):
     pipe = CdcPipeline(spark, specs, restart)
     pipe.start_stream(src, ckpt, schema=envelope_schema(ROW), available_now=True).awaitTermination(120)
     assert_store_matches(spark, restart, pipe.snapshot_all_tables(events, 1600))
+
+
+def from_database(events, db):
+    """``events`` as if captured from database ``db``."""
+    data = F.col("data")
+    return events.withColumn(
+        "data",
+        data.withField("database_name", F.lit(db)).withField(
+            "full_table_name", F.concat(F.lit(f"{db}."), data["table_name"])
+        ),
+    )
+
+
+class OverlapSink(ParquetSnapshotSink):
+    """Slow merges that note the most merges ever in flight on one table."""
+
+    def __init__(self, root):
+        super().__init__(root)
+        self.lock = threading.Lock()
+        self.in_flight: dict[str, int] = {}
+        self.peak = 0
+
+    def merge(self, changes, table, **kw):
+        with self.lock:
+            self.in_flight[table] = self.in_flight.get(table, 0) + 1
+            self.peak = max(self.peak, self.in_flight[table])
+        try:
+            time.sleep(0.3)
+            return super().merge(changes, table, **kw)
+        finally:
+            with self.lock:
+                self.in_flight[table] -= 1
+
+
+def test_specs_sharing_a_target_merge_in_spec_order(spark, events, tmp_path):
+    """Two sources told apart by an E4 extra key column, ``db.t0`` and
+    ``other.t0``, both materialize into ``T0`` next to four tables of
+    their own. Their merges share one chain and run in spec order, never
+    two at once, so neither loses a compare-and-swap to the other: every
+    batch advances ``T0`` by two versions, and the store equals the
+    union cut."""
+    shared = [
+        PipelineSpec(f"{db}.t0", key_columns=["id"], extra_key_column=("src", db))
+        for db in ("db", "other")
+    ]
+    others = fanout_specs()[1:5]
+    specs = [shared[0], others[0], shared[1], *others[1:]]
+    log = events.unionByName(from_database(events, "other"))
+    sink = OverlapSink(str(tmp_path / "store"))
+    pipe = CdcPipeline(spark, specs, sink)
+    pipe.materialize_batch(log.filter(F.col("seq") <= 800), batch_id=0)
+    pipe.materialize_batch(log.filter(F.col("seq") > 800), batch_id=1)
+
+    assert sink.peak == 1
+    assert not pipe.write_errors
+    assert [(m.table, m.batch_id, m.version) for m in pipe.metrics if m.table == "T0"] == [
+        ("T0", 0, 0), ("T0", 0, 1), ("T0", 1, 2), ("T0", 1, 3)
+    ]
+    assert [m.table for m in pipe.metrics] == 2 * [s.target_table for s in specs]
+    expected = pipe.snapshot_all_tables(log, 1600)
+    assert sorted(expected) == ["T0", "T1", "T2", "T3", "T4"]
+    assert_store_matches(spark, sink, expected)
+    assert sink.read(spark, "T0").groupBy("src").count().count() == 2
