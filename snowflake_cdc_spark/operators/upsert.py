@@ -98,37 +98,3 @@ def synthetic_primary_key(df: DataFrame, pk_cols: list[str], out_col: str = "pri
         out_col, F.sha2(F.concat_ws("\x1f", *[F.col(c).cast("string") for c in pk_cols]), 256)
     )
 
-
-def merge_upsert(
-    target: DataFrame,
-    changes: DataFrame,
-    key_cols: list[str],
-    seq_col: str = "seq",
-    delete_col: str = "is_delete",
-    hard_delete: bool = True,
-) -> DataFrame:
-    """One micro-batch MERGE step expressed relationally: next_target =
-    latest( target_as_changes ∪ changes ).
-
-    Equivalent to ``MERGE INTO target USING latest_changes ON keys WHEN
-    MATCHED AND is_delete THEN DELETE WHEN MATCHED THEN UPDATE WHEN NOT
-    MATCHED [AND NOT is_delete] THEN INSERT``. Used by the local
-    parquet-snapshot sink; the Snowflake sink emits the real MERGE SQL
-    (sinks/snowflake.py).
-
-    ``target`` rows are treated as changes with seq = their stored seq, so
-    out-of-order/late batches can never regress a row (late event = lower
-    seq loses; SURVEY.md §2.8). Schemas are aligned by name with missing
-    columns NULL-filled on either side, so late old-schema batches (or
-    batches carrying newly drifted columns) merge instead of crashing —
-    same posture as the snapshot sink.
-    """
-    # Target snapshot rows carry no delete marker → mark not-deleted.
-    t = target
-    if delete_col not in t.columns:
-        t = t.withColumn(delete_col, F.lit(False))
-    aligned = t.unionByName(changes, allowMissingColumns=True)
-    latest = latest_by_key(aligned, key_cols, seq_col)
-    if hard_delete:
-        return latest.filter(~F.coalesce(F.col(delete_col), F.lit(False))).drop(delete_col)
-    return latest

@@ -14,9 +14,27 @@ write stages into a unique dir, atomically claims its version number by
 rename, and CAS-checks ``_CURRENT`` against the version it derived from
 before flipping — a losing concurrent merge raises
 ``ConcurrentWriteError`` and rolls back instead of silently discarding
-the winner's changes (see ``overwrite``). In production this class is swapped for the Snowflake adapter
+the winner's changes (see ``overwrite``). A writer that dies between the
+claim and the flip leaves an unflipped ``v=<n>``; once it is older than
+``STALE_AFTER_S`` the next writer to collide with it adopts it (flips to
+it), and ``vacuum`` sweeps stage dirs of dead writers by the same age.
+In production this class is swapped for the Snowflake adapter
 (sinks/snowflake.py) or a real lakehouse table; the pipeline code is
 sink-agnostic.
+
+Read path: a FLIPPED version (``v <= current_version``) is immutable —
+nothing rewrites a committed ``v=<n>`` — so ``read_version`` memoizes its
+DataFrame (the parquet read with tombstones filtered) per
+``(SparkSession, table, version)`` in a per-sink LRU of
+``READ_MEMO_SIZE`` entries. A repeat read (every ``register_generation``
+re-registers the same versions) then lists no files and runs no
+schema-inference job. The session is part of the key because a
+DataFrame belongs to the session that built it. Every lookup still
+stats the version dir first, so a version vacuumed by another sink or
+process raises ``FileNotFoundError`` (and drops its entry); ``vacuum``
+evicts what it deletes. A claimed-but-unflipped ``v=<n>`` is never
+memoized: until the flip its writer may still roll it back, and a
+retried write may claim the number with different content.
 
 Schema evolution (E2): ``merge`` aligns old and new schemas with
 ``unionByName(allowMissingColumns=True)`` — a column appearing
@@ -26,11 +44,23 @@ mid-stream widens the snapshot, with NULLs for history until backfill.
 from __future__ import annotations
 
 import os
+import stat
+import threading
+import time
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from snowflake_cdc_spark.operators.upsert import latest_by_key
+
+# Age past which a write artifact with no live owner is crash debris: an
+# unflipped version claim, a ``.v<n>.stage.*`` dir, a ``.gen=*.tmp``
+# file. Live writers hold each of them for seconds, not an hour.
+STALE_AFTER_S = 3600.0
+
+# Memoized ``read_version`` DataFrames kept per sink (LRU).
+READ_MEMO_SIZE = 128
 
 # Internal column marking hard-deleted keys. Tombstones are RETAINED in the
 # stored snapshot and filtered at read time: if deletes were physically
@@ -60,6 +90,9 @@ class GenerationRetentionError(FileNotFoundError):
 class ParquetSnapshotSink:
     def __init__(self, root: str) -> None:
         self.root = root
+        # (spark, table, version) -> ((st_ino, st_mtime_ns) of v=<n>, df)
+        self._read_memo: OrderedDict = OrderedDict()
+        self._read_memo_lock = threading.Lock()
 
     # ---- version bookkeeping -------------------------------------------
 
@@ -366,7 +399,7 @@ class ParquetSnapshotSink:
     def prune_generations(
         self,
         keep_generations: int = 8,
-        adopt_stale_claims_after_s: float = 3600.0,
+        adopt_stale_claims_after_s: float = STALE_AFTER_S,
     ) -> list[int]:
         """Retention policy for generation manifests (VERDICT r09 #2):
         keep the newest ``keep_generations`` COMMITTED generations
@@ -394,8 +427,6 @@ class ParquetSnapshotSink:
           without its manifest is provably prune debris (every
           committed-past generation has both by the adoption
           invariant) and is removed."""
-        import time
-
         if keep_generations < 1:
             raise ValueError("keep_generations must be >= 1")
         with self._maintenance_lock():
@@ -455,7 +486,7 @@ class ParquetSnapshotSink:
                     if name.startswith(".gen=") and name.endswith(".tmp"):
                         p = os.path.join(d, name)
                         try:
-                            if now - os.path.getmtime(p) > 3600:
+                            if now - os.path.getmtime(p) > STALE_AFTER_S:
                                 os.remove(p)
                         except FileNotFoundError:
                             pass
@@ -479,26 +510,63 @@ class ParquetSnapshotSink:
     def read(self, spark: SparkSession, table: str) -> DataFrame:
         """User-facing snapshot: tombstones filtered out (hard-deleted keys
         are invisible but retained internally — see ``merge``)."""
-        df = self._read_raw(spark, table)
-        if TOMBSTONE in df.columns:
-            df = df.filter(~F.col(TOMBSTONE)).drop(TOMBSTONE)
-        return df
+        return self.read_version(spark, table, self._snapshot_version(table))
 
     def _read_raw(self, spark: SparkSession, table: str) -> DataFrame:
+        v = self._snapshot_version(table)
+        return spark.read.parquet(os.path.join(self._table_dir(table), f"v={v}"))
+
+    def _snapshot_version(self, table: str) -> int:
         v = self.current_version(table)
         if v < 0:
             raise FileNotFoundError(f"no snapshot for table {table!r} under {self.root}")
-        return spark.read.parquet(os.path.join(self._table_dir(table), f"v={v}"))
+        return v
 
     def read_version(self, spark: SparkSession, table: str, version: int) -> DataFrame:
-        """Time travel: read a specific retained snapshot version."""
+        """Time travel: read a specific retained snapshot version
+        (tombstones filtered).
+
+        Memoized per ``(spark, table, version)`` once the version is
+        flipped (see the module docstring). The version dir is stat'ed
+        on every call: a missing dir raises ``FileNotFoundError`` and
+        drops the entry, and a dir whose inode or mtime changed (the
+        store was rebuilt at the same path) is read afresh."""
         path = os.path.join(self._table_dir(table), f"v={version}")
-        if not os.path.isdir(path):
+        try:
+            st = os.stat(path)
+        except FileNotFoundError:
+            st = None
+        if st is None or not stat.S_ISDIR(st.st_mode):
+            self._evict(table, {version})
             raise FileNotFoundError(f"version {version} of {table!r} not found")
+        key = (spark, table, version)
+        ident = (st.st_ino, st.st_mtime_ns)
+        with self._read_memo_lock:
+            hit = self._read_memo.get(key)
+            if hit is not None and hit[0] == ident:
+                self._read_memo.move_to_end(key)
+                return hit[1]
         df = spark.read.parquet(path)
         if TOMBSTONE in df.columns:
             df = df.filter(~F.col(TOMBSTONE)).drop(TOMBSTONE)
+        # checked AFTER the read: a claim flipped in between was already
+        # its final content when read
+        if version <= self.current_version(table):
+            with self._read_memo_lock:
+                self._read_memo[key] = (ident, df)
+                self._read_memo.move_to_end(key)
+                while len(self._read_memo) > READ_MEMO_SIZE:
+                    self._read_memo.popitem(last=False)
         return df
+
+    def _evict(self, table: str, versions: set[int]) -> None:
+        """Drop the memoized reads of ``versions`` of ``table``, in every
+        session."""
+        with self._read_memo_lock:
+            for key in [
+                k for k in self._read_memo if k[1] == table and k[2] in versions
+            ]:
+                del self._read_memo[key]
 
     def versions(self, table: str) -> list[int]:
         d = self._table_dir(table)
@@ -532,7 +600,8 @@ class ParquetSnapshotSink:
         first to shrink that pin set; retention of manifests and of the
         versions they pin move in lockstep). Old versions are what give
         replay / time travel; at scale they're also storage — same
-        trade Delta's VACUUM makes."""
+        trade Delta's VACUUM makes. Also sweeps the stage dirs of
+        crashed writers (``_sweep_stale_stages``)."""
         import shutil
 
         # pin-read + delete under the store maintenance lock (ADVICE
@@ -549,7 +618,35 @@ class ParquetSnapshotSink:
             ]
             for v in removable:
                 shutil.rmtree(os.path.join(self._table_dir(table), f"v={v}"))
+            self._evict(table, set(removable))
+            self._sweep_stale_stages(table)
         return removable
+
+    def _sweep_stale_stages(self, table: str) -> None:
+        """Remove ``.v<n>.stage.*`` dirs that nothing has written to for
+        ``STALE_AFTER_S``: their writer crashed between staging and the
+        claim rename. Age is the newest mtime anywhere in the dir, so a
+        long-running live write, which keeps adding task output, is
+        never swept."""
+        import shutil
+
+        d = self._table_dir(table)
+        if not os.path.isdir(d):
+            return
+        now = time.time()
+        for name in os.listdir(d):
+            if not (name.startswith(".v") and ".stage." in name):
+                continue
+            stage = os.path.join(d, name)
+            newest = 0.0
+            try:
+                for sub, _, files in os.walk(stage):
+                    for p in [sub, *(os.path.join(sub, n) for n in files)]:
+                        newest = max(newest, os.path.getmtime(p))
+            except FileNotFoundError:
+                continue  # its live writer is moving task output
+            if now - newest > STALE_AFTER_S:
+                shutil.rmtree(stage, ignore_errors=True)
 
     def compact(
         self,
@@ -616,7 +713,11 @@ class ParquetSnapshotSink:
         d = self._table_dir(table)
         os.makedirs(d, exist_ok=True)
         stage = os.path.join(d, f".v{v}.stage.{uuid.uuid4().hex}")
-        df.write.mode("overwrite").parquet(stage)
+        try:
+            df.write.mode("overwrite").parquet(stage)
+        except BaseException:
+            shutil.rmtree(stage, ignore_errors=True)
+            raise
         final = os.path.join(d, f"v={v}")
         try:
             os.rename(stage, final)
@@ -627,15 +728,20 @@ class ParquetSnapshotSink:
             # callers don't retry an operation that can never succeed
             import errno
 
-            if e.errno not in (errno.ENOTEMPTY, errno.EEXIST, errno.EISDIR):
-                shutil.rmtree(stage, ignore_errors=True)
-                raise
             shutil.rmtree(stage, ignore_errors=True)
+            if e.errno not in (errno.ENOTEMPTY, errno.EEXIST, errno.EISDIR):
+                raise
+            self._adopt_stale_claim(table, v)
             raise ConcurrentWriteError(
                 f"{table}: version v={v} already claimed by another "
                 f"writer; re-read the snapshot and retry the merge"
             ) from e
-        if self.current_version(table) != expected_current:
+        cur = self.current_version(table)
+        if cur == v:
+            # another writer took this claim for a dead writer's and
+            # adopted it (``_adopt_stale_claim``): what it committed is ours
+            return v
+        if cur != expected_current:
             shutil.rmtree(final, ignore_errors=True)
             raise ConcurrentWriteError(
                 f"{table}: snapshot advanced past v={expected_current} "
@@ -644,6 +750,30 @@ class ParquetSnapshotSink:
             )
         self._flip(table, v)
         return v
+
+    def _adopt_stale_claim(self, table: str, v: int) -> None:
+        """Flip to ``v=<v>`` if it is a claim whose writer died before
+        its flip: older than ``STALE_AFTER_S`` and one past ``_CURRENT``.
+        A claim holds a complete version (the rename is atomic), so this
+        commits exactly what the dead writer staged — the helping move
+        ``publish_generation`` makes for generation claims. Without it,
+        every later merge would lose the claim race at ``v`` for good.
+
+        Check and flip run under the store maintenance lock: two
+        adopters could otherwise both pass the check, and the later
+        flip would regress ``_CURRENT`` past a merge committed on top of
+        the earlier one."""
+        try:
+            age = time.time() - os.path.getmtime(
+                os.path.join(self._table_dir(table), f"v={v}")
+            )
+        except FileNotFoundError:
+            return  # its writer rolled it back meanwhile
+        if age <= STALE_AFTER_S:
+            return
+        with self._maintenance_lock():
+            if self.current_version(table) == v - 1:
+                self._flip(table, v)
 
     def merge(
         self,
