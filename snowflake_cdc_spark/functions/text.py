@@ -156,8 +156,7 @@ def fingerprint(col: Column | str) -> Column:
 # q173 PMI, q174 Zipf, q202 mixing, q149/q201 set-sim shingles
 # (operators/setsim.py), q180 phrase search (operators/phrase.py),
 # q203/q218/q224 sharding tokens (operators/sharding.py), q228 CI,
-# q230 representatives, q233 corpus grid, and the vocab-novelty
-# maintainer) all tokenize with the \p{L}\p{M} letter-run class in both
+# q230 representatives and q233 corpus grid) all tokenize with the \p{L}\p{M} letter-run class in both
 # engines. On the all-ASCII driver fixture the two classes produce
 # IDENTICAL tokens over lowered text, so the migration was
 # hash-neutral (tests/test_unicode_migration.py proves token-level

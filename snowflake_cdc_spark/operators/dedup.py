@@ -161,9 +161,9 @@ def minhash_features(
     shingle_n: int = 3,
 ) -> DataFrame:
     """Per-document MinHash features ``(id, sig, hset)`` — the zero-shuffle
-    half of the LSH pipeline, split out (round 3) so the streaming
-    maintainer can persist features across micro-batches instead of
-    recomputing text→shingles→signature per join. Rows whose shingle set
+    half of the LSH pipeline, split out (round 3) so a caller can
+    persist features once instead of recomputing text→shingles→signature
+    per join. Rows whose shingle set
     is empty (texts shorter than ``shingle_n`` words) are excluded: they
     can never produce a candidate pair."""
     # cache barrier at the shingle level: downstream expressions reference

@@ -33,7 +33,7 @@ window sort yield both the exhaustive and the ANN rank.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -57,18 +57,12 @@ class PqIndex:
     vec_col: str
     m: int = 8
     k: int = 16
-    extras: dict = field(default_factory=dict)
 
 
-def _encode_udf(codebooks: list, with_error: bool = False):
+def _encode_udf(codebooks: list):
     """Vectorized encoder against FROZEN codebooks: per Arrow batch, one
     argmin per subspace (``||v-c||² argmin ≡ (-2 v·c + ||c||²) argmin``;
-    ties -> lowest index). ``with_error=True`` additionally emits the
-    vector's total quantization error Σ_j min_c ||v_j - c||² — FREE at
-    encode time (the distance row is already materialized for the
-    argmin; the error just takes its min and re-adds the dropped
-    ``||v_j||²`` term) — the drift signal ``CodebookDriftMonitor``
-    watches."""
+    ties -> lowest index)."""
     import numpy as np
     import pandas as pd
 
@@ -79,42 +73,26 @@ def _encode_udf(codebooks: list, with_error: bool = False):
     def _encode(col):
         V = np.vstack(col.to_numpy()).astype(np.float64)  # (n, dim)
         codes = np.empty((len(V), m), dtype=np.int32)
-        qerr = np.zeros(len(V), dtype=np.float64) if with_error else None
         for j in range(m):
             Vj = V[:, j * sub : (j + 1) * sub]
             D = -2 * Vj @ books_arr[j].T + b_sq[j][None, :]
             codes[:, j] = D.argmin(1)
-            if with_error:
-                qerr += D.min(1) + (Vj**2).sum(1)
-        if with_error:
-            return pd.DataFrame({"code": list(codes), "qerr": qerr})
         return pd.Series(list(codes))
 
-    if with_error:
-        return F.pandas_udf(_encode, "code array<int>, qerr double")
     return F.pandas_udf(_encode, ArrayType(IntegerType()))
 
 
-def encode_with(
-    index: PqIndex, vectors: DataFrame, with_error: bool = False
-) -> DataFrame:
+def encode_with(index: PqIndex, vectors: DataFrame) -> DataFrame:
     """Encode new vectors against an existing index's frozen codebooks —
     the index-maintenance path: inside a streaming ``foreachBatch`` this
     appends codes for arriving vectors without ever re-encoding (or
     re-training on) the corpus. Deterministic: a vector encodes to the
     same code on every engine, batch, and partitioning. Preserves every
     input column (an IVF cell id rides along untouched — see
-    ``operators/ivfpq.py``) and appends ``code`` (+ ``qerr``, the
-    quantization error, when ``with_error`` — same single pass)."""
-    udf = _encode_udf(index.codebooks, with_error=with_error)
-    if with_error:
-        return (
-            vectors.withColumn("__enc", udf(F.col(index.vec_col)))
-            .withColumn("code", F.col("__enc.code"))
-            .withColumn("qerr", F.col("__enc.qerr"))
-            .drop("__enc")
-        )
-    return vectors.withColumn("code", udf(F.col(index.vec_col)))
+    ``operators/ivfpq.py``) and appends ``code``."""
+    return vectors.withColumn(
+        "code", _encode_udf(index.codebooks)(F.col(index.vec_col))
+    )
 
 
 def build_pq(
@@ -154,92 +132,11 @@ def build_pq(
         _train_centroids(X[:, j * sub : (j + 1) * sub], k, seed + j, max_iter)
         for j in range(m)
     ]
-    # training-time quantization error (mean Σ_j min_c ||x_j - c||² over
-    # the sample) — the baseline CodebookDriftMonitor compares arriving
-    # batches against; a few numpy matmuls over the in-memory sample
-    train_qerr = 0.0
-    for j, b in enumerate(books):
-        Xj = X[:, j * sub : (j + 1) * sub]
-        D = -2 * Xj @ b.T + (b * b).sum(1)[None, :]
-        train_qerr += float((D.min(1) + (Xj**2).sum(1)).mean())
     index = PqIndex(
-        codebooks=books, codes=None, id_col=id_col, vec_col=vec_col, m=m, k=k,
-        extras={"train_qerr": train_qerr},
+        codebooks=books, codes=None, id_col=id_col, vec_col=vec_col, m=m, k=k
     )
     index.codes = encode_with(index, corpus)
     return index
-
-
-class CodebookDriftMonitor:
-    """ANN index lifecycle monitoring (VERDICT r03 #5): ``encode_with``
-    keeps the codes table current against FROZEN codebooks, but nothing
-    in the encode itself notices when the arriving embedding
-    distribution has drifted away from the one the codebooks were
-    trained on — codes stay well-defined while recall silently decays.
-    The observable symptom is rising QUANTIZATION ERROR (vectors land
-    farther from every codeword), which the encoder now computes for
-    free in the same Arrow pass (``with_error=True``).
-
-    Per batch this records an ``IndexHealthMetric`` comparing the
-    batch-mean error against the training-sample baseline frozen at
-    ``build_pq`` time; ``mean_qerr > threshold_ratio × baseline``
-    recommends a rebuild (retrain codebooks on a fresh sample, then
-    re-encode — at 100 TB that's the rare scheduled job this signal
-    exists to trigger, instead of either never rebuilding or rebuilding
-    on a timer blind to the data).
-
-    Usage inside the foreachBatch maintenance path::
-
-        monitor = CodebookDriftMonitor(index, threshold_ratio=2.0)
-
-        def maintain(batch_df, batch_id):
-            monitor.encode_observed(
-                batch_df, batch_id,
-                write=lambda enc: enc.select(...).write.mode("append")...,
-            )
-
-    The encoded batch is persisted across the write and the one-row
-    error aggregate, so the encode executes once (the DQ-gate
-    discipline)."""
-
-    def __init__(self, index: PqIndex, threshold_ratio: float = 2.0) -> None:
-        if "train_qerr" not in index.extras:
-            raise ValueError(
-                "index has no train_qerr baseline (built before round 4?) "
-                "— rebuild with build_pq or set extras['train_qerr']"
-            )
-        self.index = index
-        self.threshold_ratio = threshold_ratio
-        self.metrics: list = []
-
-    def encode_observed(self, batch_df: DataFrame, batch_id: int, write=None):
-        """Encode one arriving batch with error tracking, optionally
-        hand the encoded frame to ``write``, and record the batch's
-        ``IndexHealthMetric``. Returns the metric."""
-        from snowflake_cdc_spark.streaming.metrics import IndexHealthMetric
-
-        enc = encode_with(self.index, batch_df, with_error=True).persist()
-        try:
-            if write is not None:
-                write(enc)
-            row = enc.agg(
-                F.count(F.lit(1)).alias("n"), F.avg("qerr").alias("q")
-            ).first()
-            n, mean_qerr = int(row["n"]), float(row["q"] or 0.0)
-            baseline = float(self.index.extras["train_qerr"])
-            ratio = (mean_qerr / baseline) if baseline > 0 else float("inf")
-            metric = IndexHealthMetric(
-                batch_id=batch_id,
-                n_vectors=n,
-                mean_qerr=mean_qerr,
-                baseline_qerr=baseline,
-                ratio=ratio,
-                rebuild_recommended=n > 0 and ratio > self.threshold_ratio,
-            )
-            self.metrics.append(metric)
-            return metric
-        finally:
-            enc.unpersist()
 
 
 ADC_MAX_QUERIES = 100_000

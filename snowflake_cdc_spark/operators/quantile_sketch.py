@@ -13,7 +13,7 @@ pure FUNCTION OF THE SET:
 
 - **mergeable, exactly**: bottom-k of a union is the bottom-k of the
   two bottom-k's (associative, commutative, idempotent — the same
-  merge law as KMV, tested over arbitrary splits);
+  merge law as KMV), which is what the next point relies on;
 - **distributed for free**: ``orderBy(md5(id)).limit(k)`` compiles to
   TakeOrderedAndProject — per-partition bottom-k summaries + a driver
   merge. Spark's own top-k machinery IS the sketch pipeline; no
@@ -47,7 +47,6 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "bottomk_sample",
-    "merge_samples",
     "quantile_estimates",
     "rank_check",
 ]
@@ -71,17 +70,6 @@ def bottomk_sample(
         .orderBy("h", "v")
         .limit(k)
     )
-
-
-def merge_samples(a: DataFrame, b: DataFrame, k: int = 256) -> DataFrame:
-    """Sketch merge: bottom-k of the SET union on (h, v) — the exact
-    merge law ``sketch(A ∪ B) = merge(sketch(A), sketch(B))`` (set
-    equality, fuzz-tested over arbitrary splits), idempotent under
-    re-merging the same summary (KMV set semantics). Contract: id_col
-    is a row key — equal (h, v) rows arriving from two merge inputs are
-    the same underlying row and collapse; the ≤2k-row dedup is
-    driver-tiny."""
-    return a.unionByName(b).dropDuplicates(["h", "v"]).orderBy("h", "v").limit(k)
 
 
 def quantile_estimates(

@@ -45,8 +45,7 @@ def scd2_from_changes(
 
     Returns ``key_cols + [attr_col, valid_from, valid_to, is_current]``
     with one row per maximal run of a constant attribute value.
-    ``keep_cols`` are carried through from each run's OPENING change row
-    (the incremental maintainer persists the opening tiebreak this way).
+    ``keep_cols`` are carried through from each run's OPENING change row.
     """
     order = [F.col(ts_col).asc(), F.col(tiebreak_col).asc()]
     w = Window.partitionBy(*key_cols).orderBy(*order)

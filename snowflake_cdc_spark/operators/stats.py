@@ -30,12 +30,24 @@ def first_last_seen(df: DataFrame, field: str, ts_col: str = "ts") -> DataFrame:
     )
 
 
-def backfill_start(first_seen_values: list, pad_minutes: int = 1):
-    """Earliest of several first-seen times minus a skew pad
-    (add_output.py:201-203, 656). Driver-side: the inputs are scalars."""
-    from datetime import timedelta
-
-    vals = [v for v in first_seen_values if v is not None]
-    if not vals:
-        return None
-    return min(vals) - timedelta(minutes=pad_minutes)
+def field_stats_report(
+    df: DataFrame, fields: list[str], ts_col: str = "ts"
+) -> DataFrame:
+    """(field, val, cnt, first_seen, last_seen) — A1 and A2 for several
+    fields at once: one stack + one map-side-combined aggregation.
+    Dotted names are nested-struct paths; NULL values are absent by the
+    first/last-seen contract (a field "holds data" when non-null)."""
+    n = len(fields)
+    pairs = ", ".join(
+        f"'{f}', CAST({f if '.' in f else '`' + f + '`'} AS STRING)"
+        for f in fields
+    )
+    stacked = df.select(
+        F.expr(f"stack({n}, {pairs})").alias("field", "val"),
+        F.col(ts_col).alias("__ts"),
+    ).filter(F.col("val").isNotNull())
+    return stacked.groupBy("field", "val").agg(
+        F.count(F.lit(1)).cast("bigint").alias("cnt"),
+        F.min("__ts").alias("first_seen"),
+        F.max("__ts").alias("last_seen"),
+    )

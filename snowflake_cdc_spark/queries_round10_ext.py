@@ -333,20 +333,17 @@ def _budget_select(sc_df, budget: int):
     )
 
 
-def _corpus_stages(spark, sf_dir, lr=None, k=None, docs=None):
+def _corpus_stages(spark, sf_dir, docs=None):
     """Run the composed pipeline; returns the per-stage DataFrames
-    {candt, f1, f2, f3, f4}. ``lr``/``k``: an externally maintained NB
-    model (the streaming maintainer's) replacing the batch-trained one —
-    the batch/streaming parity seam. ``docs``: an alternative corpus
-    relation (see ``_split``) — the store-integration seam."""
+    {candt, f1, f2, f3, f4}. ``docs``: an alternative corpus relation
+    (see ``_split``) — the store-integration seam."""
     from snowflake_cdc_spark.operators.nb import nb_score, nb_train
 
     s = _split(spark, sf_dir, docs=docs)
-    if lr is None:
-        seed = s.filter(F.col("split") == "val").select(
-            "doc_id", "pos", _uwords(F.col("text")).alias("ws")
-        )
-        lr, k = nb_train(seed)
+    seed = s.filter(F.col("split") == "val").select(
+        "doc_id", "pos", _uwords(F.col("text")).alias("ws")
+    )
+    lr, k = nb_train(seed)
 
     cand0 = s.filter(F.col("split") == "train").select(
         "doc_id",

@@ -10,8 +10,8 @@ the training corpus:
   prefix, sort-free (skewed_count_rank + the q203 bucketed cumsum);
 - q212 intra-document repetition score: dup word-3-gram fraction —
   the within-doc complement of the corpus dedup family;
-- q213 per-field stats report: the batch form of the 5th streaming
-  maintainer (A1 value distribution + A2 first/last-seen together);
+- q213 per-field stats report: A1 value distribution + A2
+  first/last-seen together, in one aggregation;
 - q214 train/test split contamination: per-test-doc fraction of
   5-gram shingles that leak from the train split — the
   decontamination audit composed on q210's deterministic split;
@@ -394,7 +394,7 @@ def q212(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# Q213 — per-field stats report (batch form of the 5th maintainer)
+# Q213 — per-field stats report (A1 + A2 in one aggregation)
 # --------------------------------------------------------------------------
 
 _FIELD_STATS_ORACLE = """
@@ -418,19 +418,16 @@ GROUP BY field, val ORDER BY field, val
 @register(
     "q213_field_stats_report",
     _FIELD_STATS_ORACLE,
-    "per-field statistics report (streaming/field_stats.py::"
-    "field_stats_report — the one-shot batch form of the 5th "
-    "maintainer, and the A1+A2 surfaces computed TOGETHER): per "
+    "per-field statistics report (operators/stats.py::"
+    "field_stats_report — the A1+A2 surfaces computed TOGETHER): per "
     "(field, value), exact count plus first/last-seen event time, over "
-    "a stacked multi-field projection — the reference's always-on "
+    "a stacked multi-field projection — the reference's "
     "inspection service (add_output.py:264-274, 524-525) as one "
-    "map-side-combined aggregation. The maintained streaming state "
-    "equals this report by the sum/min/max merge laws "
-    "(parity-fuzzed in test_field_stats_stream.py)",
+    "map-side-combined aggregation",
 )
 def q213(spark, sf_dir):
     from snowflake_cdc_spark.queries import ntz
-    from snowflake_cdc_spark.streaming.field_stats import field_stats_report
+    from snowflake_cdc_spark.operators.stats import field_stats_report
 
     ev = _t(spark, sf_dir, "events").select(
         "event_type",

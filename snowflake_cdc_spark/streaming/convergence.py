@@ -16,8 +16,8 @@ The monitor records the report per (table, batch): after batch N lands
 version v_N, it diffs (v_{N-1} → v_N) and appends one row per metric
 to an in-memory ledger plus (optionally) a parquet log under
 ``log_dir/<table>/batch=<id>`` — overwrite-per-batch, so a
-checkpoint-restart replay rewrites the same rows (replay-safe by the
-same rule the state-store maintainers use).
+checkpoint-restart replay rewrites the same rows (replay-safe without
+any read-back of earlier batches).
 
 Convergence reading: a CDC stream has CONVERGED onto its source when
 consecutive diffs go to zero (no adds, no removes, no changes) while

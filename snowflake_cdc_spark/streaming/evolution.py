@@ -122,19 +122,10 @@ def reconcile(
     target_table: str,
     raw_path: str,
     ts_col: str | None = None,
-    field_stats=None,
 ) -> list[str]:
     """The full E1→E2→E3 loop for one table. Returns the new columns
     found (empty → nothing to do, matching check_and_update_output's
-    no-op path).
-
-    ``field_stats`` (``streaming/field_stats.py``): when the always-on
-    per-field stats maintainer tracks the drifted fields, their
-    first-seen timestamps come from the maintained state instead of a
-    raw-zone scan — the reference's engine answers this probe from its
-    continuously-maintained statistics (add_output.py:264-274), and so
-    do we once the 5th maintainer runs. Fields the maintainer does not
-    track fall back to the one-aggregation scan."""
+    no-op path)."""
     target_cols = (
         sink.read(spark, target_table).columns if sink.exists(target_table) else []
     )
@@ -150,52 +141,16 @@ def reconcile(
         # reconciliation I/O by k)
         row_fields = {f.name.lower() for f in raw.schema["data"].dataType["row"].dataType.fields}
         probeable = [c for c in new_cols if c.lower() in row_fields]
-        maintained = {}
-        if field_stats is not None and probeable:
-            summ = {
-                r.field.lower(): r.first_seen
-                for r in field_stats.field_summary(spark).collect()
-            }
-            for c in probeable:
-                for key in (c.lower(), f"data.row.{c.lower()}"):
-                    if key in summ and summ[key] is not None:
-                        maintained[c] = summ[key]
-                        break
-            if maintained:
-                # Coverage cross-check (ADVICE r07): a maintainer that
-                # started AFTER the raw zone began reports first_seen
-                # values that postdate the true raw-zone minimum, and the
-                # backfill would silently skip the older rows. Proxy for
-                # the maintainer's observation start: the earliest
-                # first_seen across ALL its fields (the always-on
-                # inspection fields appear in every row, so that min is
-                # the first event the maintainer ever saw). One
-                # column-pruned min(ts) probe of the raw zone — far
-                # cheaper than the per-field isNotNull probes — decides:
-                # if the maintainer demonstrably missed the raw zone's
-                # start, its horizons are untrusted and every field falls
-                # back to the exact scan. False positives only cost that
-                # scan, never a skipped backfill.
-                coverage = [v for v in summ.values() if v is not None]
-                raw_min = raw.agg(F.min(ts_col).alias("m")).collect()[0]["m"]
-                if (
-                    not coverage
-                    or raw_min is None
-                    or min(coverage) > raw_min
-                ):
-                    maintained = {}
-        to_scan = [c for c in probeable if c not in maintained]
-        if to_scan:
+        if probeable:
             agg_row = raw.agg(
                 *[
                     F.min(
                         F.when(F.col(f"data.row.{c}").isNotNull(), F.col(ts_col))
                     ).alias(c)
-                    for c in to_scan
+                    for c in probeable
                 ]
             ).collect()[0]
-            usable = [agg_row[c] for c in to_scan if agg_row[c] is not None]
-        usable += list(maintained.values())
+            usable = [agg_row[c] for c in probeable if agg_row[c] is not None]
     if ts_col and usable:
         backfill(spark, pipeline, raw_path, min(usable), ts_col)
     else:

@@ -3,24 +3,16 @@
 The reference exposes per-field statistics and run state through its
 inspection endpoints (``add_output.py:209-219, 264-274, 524-525``); a
 self-hosted engine needs the operational half of that surface too —
-what each batch did (rows merged per table, wall time) and how the stream
-is pacing (input rows, batch duration). Two pieces:
-
-- ``BatchMetric`` rows recorded by ``CdcPipeline.materialize_batch``
-  (always on — the snapshot version is the sink merge's return value,
-  already computed; the overhead is a clock read. Input-row pacing
-  comes from the listener, which Spark computes anyway — the pipeline
-  never spends an extra action on bookkeeping);
-- ``ProgressListener``, a ``StreamingQueryListener`` that captures each
-  micro-batch's progress (batch id, input rows, duration) for
-  pacing/backpressure decisions (`maxFilesPerTrigger` tuning).
+what each batch did (rows merged per table, wall time).
+``BatchMetric`` rows are recorded by ``CdcPipeline.materialize_batch``
+(always on — the snapshot version is the sink merge's return value,
+already computed; the overhead is a clock read, and the pipeline never
+spends an extra action on bookkeeping).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
-
-from pyspark.sql.streaming import StreamingQueryListener
 
 
 @dataclass(frozen=True)
@@ -29,52 +21,3 @@ class BatchMetric:
     batch_id: int
     version: int  # snapshot version the merge produced (monotone)
     seconds: float  # wall time of the table's merge
-
-
-@dataclass(frozen=True)
-class IndexHealthMetric:
-    """Per-batch ANN index health (round 4, VERDICT r03 #5): the
-    quantization error of vectors encoded against FROZEN codebooks,
-    relative to the codebooks' training-time error. A drifting embedding
-    distribution shows up here first — codes stay valid (encode is
-    deterministic) but they discriminate worse, so recall decays
-    silently unless watched. Recorded by
-    ``operators/pq.py::CodebookDriftMonitor`` inside the foreachBatch
-    maintenance path; ``rebuild_recommended`` trips when
-    ``mean_qerr > threshold_ratio × baseline_qerr``."""
-
-    batch_id: int
-    n_vectors: int
-    mean_qerr: float  # mean Σ_j min_c ||v_j - c||² over the batch
-    baseline_qerr: float  # training-sample error frozen at build time
-    ratio: float
-    rebuild_recommended: bool
-
-
-class ProgressListener(StreamingQueryListener):
-    """Collects micro-batch progress events. Attach with
-    ``spark.streams.addListener(listener)``; events arrive
-    asynchronously after each batch completes."""
-
-    def __init__(self) -> None:
-        self.progress: list[dict] = []
-
-    def onQueryStarted(self, event) -> None:  # noqa: N802 (Spark API)
-        pass
-
-    def onQueryProgress(self, event) -> None:  # noqa: N802
-        p = event.progress
-        self.progress.append(
-            {
-                "batch_id": p.batchId,
-                "num_input_rows": p.numInputRows,
-                "duration_ms": (p.durationMs or {}).get("triggerExecution"),
-                "sink": p.sink.description if p.sink else None,
-            }
-        )
-
-    def onQueryIdle(self, event) -> None:  # noqa: N802
-        pass
-
-    def onQueryTerminated(self, event) -> None:  # noqa: N802
-        pass

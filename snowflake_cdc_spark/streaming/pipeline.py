@@ -28,6 +28,8 @@ Scale posture:
 
 from __future__ import annotations
 
+import os
+import shutil
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
@@ -128,6 +130,9 @@ class CdcPipeline:
         reach the merge. Delete events are exempt (their after-image is
         legitimately NULL). Gating requires ``quarantine_dir``: a quality
         gate that silently drops rows is a data-loss bug, not a policy.
+        Each spec gets its own partition inside the batch's dir
+        (``_quarantine_part``), so specs sharing a target never overwrite
+        each other's rows.
 
         ``convergence`` (``streaming/convergence.py``): when set, every
         successful table merge is followed by a snapshot-to-snapshot
@@ -231,6 +236,17 @@ class CdcPipeline:
             name, value = spec.extra_key_column
             flat = flat.withColumn(name, F.lit(value))
         return flat
+
+    def _quarantine_part(self, spec: PipelineSpec, prefix: str, batch_id: int) -> str:
+        """``<quarantine_dir>/<target>/<prefix>=<id>/full_table_name=<name>``.
+        The full table name tells apart specs that share a target. Spark
+        lists only ``k=v`` subdirs, so this one keeps a read of the batch
+        dir returning every spec's rows, with a ``full_table_name``
+        column."""
+        return (
+            f"{self.quarantine_dir}/{spec.target_table}/{prefix}={batch_id}"
+            f"/full_table_name={spec.full_table_name}"
+        )
 
     def _key_cols(self, spec: PipelineSpec) -> list[str]:
         keys = (
@@ -347,7 +363,7 @@ class CdcPipeline:
                 n_bad = bad.count()
                 if n_bad:
                     bad.write.mode("overwrite").parquet(
-                        f"{self.quarantine_dir}/{table}/dq_batch={batch_id}"
+                        self._quarantine_part(spec, "dq_batch", batch_id)
                     )
                     res.dq_violations.append((table, batch_id, n_bad))
             finally:
@@ -398,7 +414,7 @@ class CdcPipeline:
                 # down with it
                 try:
                     changes.write.mode("overwrite").parquet(
-                        f"{self.quarantine_dir}/{table}/batch={batch_id}"
+                        self._quarantine_part(spec, "batch", batch_id)
                     )
                 except Exception as qe:  # noqa: BLE001
                     res.write_errors.append(
@@ -601,30 +617,30 @@ def replay_quarantine(
 ) -> int:
     """Re-ingest quarantined rows after the upstream defect is fixed —
     the second half of the quarantine contract (diverting rows is only
-    safe because they can come back). Reads
-    ``quarantine_dir/<table>/{dq_batch|batch}=<id>`` and merges the rows
-    through the NORMAL seq-guarded sink merge: replays are idempotent,
-    and a quarantined change that was later superseded by a higher seq
-    loses the merge race instead of regressing the row — so replaying
-    late, twice, or out of order is all safe. Re-applies the table's
-    CURRENT expectations first (a still-violating row stays quarantined;
-    pass an empty expectation list via ``pipeline.dq_expectations`` to
-    force-accept). Returns the number of rows merged.
+    safe because they can come back). For each batch, each spec that
+    targets ``table`` replays its own partition
+    (``CdcPipeline._quarantine_part``) with its own keys and delete
+    strategy, in spec order. The rows go through the NORMAL seq-guarded
+    sink merge: replays are idempotent, and a quarantined change that
+    was later superseded by a higher seq loses the merge race instead of
+    regressing the row — so replaying late, twice, or out of order is
+    all safe. Re-applies the table's CURRENT expectations first (a
+    still-violating row stays quarantined; pass an empty expectation
+    list via ``pipeline.dq_expectations`` to force-accept). Returns the
+    number of rows merged.
 
     Quarantine contents always reflect PENDING work: after a successful
     merge each replayed partition is rewritten with only its
-    still-violating rows (deleted outright when none remain), so a
-    repeat call neither re-merges already-replayed rows nor
-    double-counts them, and still-violating rows survive explicitly
-    rather than by the accident of the original file persisting."""
+    still-violating rows (deleted outright when none remain, and the
+    batch dir with its last partition), so a repeat call neither
+    re-merges already-replayed rows nor double-counts them, and
+    still-violating rows survive explicitly rather than by the accident
+    of the original file persisting."""
     if not pipeline.quarantine_dir:
         raise ValueError("pipeline has no quarantine_dir")
     prefix = "dq_batch" if kind == "dq" else "batch"
     base = f"{pipeline.quarantine_dir}/{table}"
-    spark = pipeline.spark
     if batch_ids is None:
-        import os
-
         if not os.path.isdir(base):
             return 0
         batch_ids = sorted(
@@ -632,51 +648,59 @@ def replay_quarantine(
             for d in os.listdir(base)
             if d.startswith(f"{prefix}=")
         )
-    import os
-    import shutil
-
-    spec = next(s for s in pipeline.specs if s.target_table == table)
+    specs = [s for s in pipeline.specs if s.target_table == table]
     merged = 0
     for bid in batch_ids:
-        part = f"{base}/{prefix}={bid}"
-        rows = spark.read.parquet(part)
-        exps = pipeline.dq_expectations.get(table)
-        still_bad = None
-        if exps:
-            from snowflake_cdc_spark.operators.expectations import row_gate
-
-            rows, still_bad = row_gate(rows, exps, exempt=F.col("is_delete"))
-            # materialize before the partition rewrite below: the plan
-            # reads the very files we are about to replace
-            still_bad = still_bad.persist()
-            still_bad.count()
-        keys = pipeline._key_cols(spec)
-        reduced = latest_by_key(rows, keys, "seq")
-        # persist for the same reason as still_bad — merge() and the
-        # returned count both execute after the source files are gone
-        reduced = reduced.persist()
-        try:
-            n_merged = reduced.count()
-            pipeline.sink.merge(
-                reduced,
-                spec.target_table,
-                key_cols=keys,
-                seq_col="seq",
-                delete_col="is_delete",
-                hard_delete=spec.delete_strategy is DeleteStrategy.HARD,
-                logical_col=spec.logical_delete_col,
-            )
-            merged += n_merged
-            # merge succeeded: the partition now holds only pending work
-            tmp = f"{base}/.__replay_tmp_{prefix}={bid}"
-            if still_bad is not None and still_bad.count():
-                still_bad.write.mode("overwrite").parquet(tmp)
-                shutil.rmtree(part)
-                os.rename(tmp, part)
-            else:
-                shutil.rmtree(part)
-        finally:
-            reduced.unpersist()
-            if still_bad is not None:
-                still_bad.unpersist()
+        for spec in specs:
+            part = pipeline._quarantine_part(spec, prefix, bid)
+            if os.path.isdir(part):
+                merged += _replay_part(pipeline, spec, part)
+        batch_dir = f"{base}/{prefix}={bid}"
+        if os.path.isdir(batch_dir) and not os.listdir(batch_dir):
+            os.rmdir(batch_dir)
     return merged
+
+
+def _replay_part(pipeline: CdcPipeline, spec: PipelineSpec, part: str) -> int:
+    """Merge one spec's quarantine partition, then leave in it only the
+    rows that still violate. Returns the number of rows merged."""
+    rows = pipeline.spark.read.parquet(part)
+    exps = pipeline.dq_expectations.get(spec.target_table)
+    still_bad = None
+    if exps:
+        from snowflake_cdc_spark.operators.expectations import row_gate
+
+        rows, still_bad = row_gate(rows, exps, exempt=F.col("is_delete"))
+        # materialize before the partition rewrite below: the plan
+        # reads the very files we are about to replace
+        still_bad = still_bad.persist()
+        still_bad.count()
+    keys = pipeline._key_cols(spec)
+    reduced = latest_by_key(rows, keys, "seq")
+    # persist for the same reason as still_bad — merge() and the
+    # returned count both execute after the source files are gone
+    reduced = reduced.persist()
+    try:
+        n_merged = reduced.count()
+        pipeline.sink.merge(
+            reduced,
+            spec.target_table,
+            key_cols=keys,
+            seq_col="seq",
+            delete_col="is_delete",
+            hard_delete=spec.delete_strategy is DeleteStrategy.HARD,
+            logical_col=spec.logical_delete_col,
+        )
+        # merge succeeded: the partition now holds only pending work
+        if still_bad is not None and still_bad.count():
+            tmp = f"{os.path.dirname(part)}/.__replay_tmp_{os.path.basename(part)}"
+            still_bad.write.mode("overwrite").parquet(tmp)
+            shutil.rmtree(part)
+            os.rename(tmp, part)
+        else:
+            shutil.rmtree(part)
+        return n_merged
+    finally:
+        reduced.unpersist()
+        if still_bad is not None:
+            still_bad.unpersist()

@@ -1,14 +1,11 @@
-"""Regression tests for the four ADVICE r08 findings.
+"""Regression tests for three ADVICE r08 findings.
 
 1. q233's oracle used the linear ((r-1)*k)//n bucket formula while the
    engine uses the ntile fill — divergent whenever n % 4 == 2. The
    oracle now spells the same ntile CASE as q140; parity must hold on a
    corpus whose count is NOT divisible by 4.
 2. config.py convergence wiring crashed on ``"convergence": false``.
-3. PqIndexMaintainer: a re-arriving (updated) id left its stale code in
-   the older generation — search() could return the id twice and
-   compact() duplicated its row.
-4. q226's freq_band used float log2, which flips at power-of-two counts
+3. q226's freq_band used float log2, which flips at power-of-two counts
    across engines; functions/intmath.py::quarter_log2_band is the exact
    integer replacement and must equal floor(4*log2(c)) everywhere.
 """
@@ -16,16 +13,12 @@
 from __future__ import annotations
 
 import duckdb
-import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from snowflake_cdc_spark.functions.intmath import (
     quarter_log2_band,
     quarter_log2_band_sql,
 )
-from snowflake_cdc_spark.operators.pq import build_pq
-from snowflake_cdc_spark.streaming.pq_maintenance import PqIndexMaintainer
 from tests.conftest import canon_rows
 
 # deep-soak lane: excluded from the default fast run (pytest.ini,
@@ -112,51 +105,7 @@ def test_config_convergence_false_disables(spark, tmp_path):
     assert pipe.convergence is not None
 
 
-# --------------------------------------- 3. re-arriving id dedup in PQ
-
-
-def test_pq_maintainer_rearriving_id(spark):
-    """id 5 arrives in gen 0, then RE-arrives (moved vector) in the
-    batch that trips a new generation: search() must return it once per
-    query (scored on the NEW vector) and compact() must keep one row."""
-    rng = np.random.default_rng(3)
-    dim, m, k = 8, 4, 16
-    schema = "vec_id long, embedding array<double>"
-
-    def mk(n, start, lo, hi):
-        x = rng.uniform(lo, hi, (n, dim))
-        return [(start + i, [float(v) for v in x[i]]) for i in range(n)]
-
-    corpus = mk(120, 0, -1.0, 1.0)
-    index = build_pq(spark.createDataFrame(corpus, schema), m=m, k=k, seed=11)
-    maint = PqIndexMaintainer(index, threshold_ratio=2.0)
-
-    # drifted batch RE-DELIVERS id 5 with a far-away updated vector
-    shifted = mk(80, 3000, 9.0, 11.0)
-    new_vec5 = [10.0] * dim
-    maint.process_batch(
-        spark.createDataFrame(shifted + [(5, new_vec5)], schema), 1
-    )
-    assert len(maint.versions) == 2, "shift must open a new generation"
-
-    qdf = spark.createDataFrame([(1, new_vec5)], "query_id long, query_vec array<double>")
-    hits = maint.search(qdf, k=10, shortlist=40).collect()
-    ids = [r.vec_id for r in hits]
-    assert ids.count(5) == 1, f"id 5 returned {ids.count(5)} times: {ids}"
-    sim5 = [r.sim for r in hits if r.vec_id == 5][0]
-    assert sim5 == pytest.approx(1.0, abs=1e-3), (
-        "id 5 must be scored on its NEW vector (cosine ~1 to the query)"
-    )
-
-    maint.compact()
-    codes = maint.codes[0]
-    per_id = codes.groupBy("vec_id").count().filter(F.col("count") > 1)
-    assert per_id.count() == 0, "compact() must keep one row per id"
-    kept = codes.filter(F.col("vec_id") == 5).select("embedding").head()[0]
-    assert kept == new_vec5, "compact() must keep the NEWEST generation's vector"
-
-
-# ------------------------------------------- 4. exact quarter-log2 band
+# ------------------------------------------- 3. exact quarter-log2 band
 
 
 def test_quarter_log2_band_exact(spark):

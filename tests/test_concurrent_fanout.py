@@ -6,6 +6,7 @@ join point after every chain has settled."""
 
 from __future__ import annotations
 
+import os
 import random
 import re
 import threading
@@ -334,3 +335,33 @@ def test_specs_sharing_a_target_merge_in_spec_order(spark, events, tmp_path):
     assert sorted(expected) == ["T0", "T1", "T2", "T3", "T4"]
     assert_store_matches(spark, sink, expected)
     assert sink.read(spark, "T0").groupBy("src").count().count() == 2
+
+
+def test_specs_sharing_a_target_replay_their_own_quarantine(spark, events, tmp_path):
+    """``db.t0`` and ``other.t0`` both materialize into ``T0`` and both
+    have DQ violations in one batch. Each spec's violators land in its
+    own quarantine partition, so after the gate is relaxed the replay
+    brings back both sources' rows under their own keys: ``T0`` equals
+    the ungated cut, and the quarantine is drained."""
+    specs = [
+        PipelineSpec(f"{db}.t0", key_columns=["id"], extra_key_column=("src", db))
+        for db in ("db", "other")
+    ]
+    log = events.unionByName(from_database(events, "other"))
+    sink = ParquetSnapshotSink(str(tmp_path / "store"))
+    pipe = CdcPipeline(
+        spark, specs, sink,
+        quarantine_dir=str(tmp_path / "q"),
+        dq_expectations={"T0": [in_range("amount", 0.0, 1000.0)]},
+    )
+    pipe.materialize_batch(log, batch_id=0)
+    assert [(t, b) for t, b, _ in pipe.dq_violations] == [("T0", 0), ("T0", 0)]
+    quarantined = spark.read.parquet(str(tmp_path / "q" / "T0" / "dq_batch=0"))
+    assert sorted(
+        r[0] for r in quarantined.select("full_table_name").distinct().collect()
+    ) == ["db.t0", "other.t0"]
+
+    pipe.dq_expectations = {"T0": [in_range("amount", -1000.0, 1000.0)]}
+    assert replay_quarantine(pipe, "T0") > 0
+    assert_store_matches(spark, sink, pipe.snapshot_all_tables(log, 1600))
+    assert os.listdir(tmp_path / "q" / "T0") == []

@@ -1,8 +1,7 @@
 """End-to-end corpus-build lane (VERDICT r09 #1): the composed
 filter -> decontaminate -> dedup -> select -> pack pipeline behind
-q239/q240 — stage semantics on the planted fixture, and the
-batch/streaming parity seam where the NB maintainer's incrementally
-built model replaces the batch-trained one."""
+q239/q240 — stage semantics on the planted fixture, and the same build
+fed from a CDC-materialized store."""
 
 from __future__ import annotations
 
@@ -201,58 +200,12 @@ def test_build_consumes_the_store_generation_view(spark, tmp_path):
         assert a == b, f"stage {st} diverged reading through the store"
 
 
-def test_streaming_nb_model_drives_the_same_build(spark, tmp_path):
-    """VERDICT r09 #1 done-criterion: the corpus build re-run with the
-    NB maintainer's incrementally-maintained model in place of the
-    batch-trained one selects the IDENTICAL corpus — the seed split
-    arrives as two micro-batches through the streaming maintainer, and
-    every downstream stage (and the final packing manifest) matches."""
-    from snowflake_cdc_spark.operators.packing import packing_stats
-    from snowflake_cdc_spark.queries_round10_ext import (
-        _CB_BUCKETS,
-        _CB_CAPACITY,
-    )
-    from snowflake_cdc_spark.streaming.nb_stream import NbClassifierMaintainer
-
-    seed = (
-        _split(spark, SF_SMOKE)
-        .filter(F.col("split") == "val")
-        .select("doc_id", "pos", "text")
-    )
-    maint = NbClassifierMaintainer(str(tmp_path / "state"))
-    # two arbitrary micro-batches (exact mergeable counts — any split)
-    maint.process_batch(seed.filter(F.col("doc_id") % 2 == 0), batch_id=0)
-    maint.process_batch(seed.filter(F.col("doc_id") % 2 == 1), batch_id=1)
-    lr, k = maint.model(spark)
-
-    batch = _corpus_stages(spark, SF_SMOKE)
-    stream = _corpus_stages(spark, SF_SMOKE, lr=lr, k=k)
-    for st in ("f1", "f4"):
-        a = {r["doc_id"] for r in batch[st].select("doc_id").collect()}
-        b = {r["doc_id"] for r in stream[st].select("doc_id").collect()}
-        assert a == b, f"stage {st} diverged under the maintained model"
-
-    mk = lambda stages: sorted(  # noqa: E731
-        map(
-            tuple,
-            packing_stats(
-                _bpe_perdoc(stages["f4"]),
-                "doc_id",
-                "n_bpe",
-                capacity=_CB_CAPACITY,
-                n_buckets=_CB_BUCKETS,
-            ).collect(),
-        )
-    )
-    assert mk(batch) == mk(stream)
-
-
 def test_cdc_stream_to_corpus_build_end_to_end(spark, tmp_path):
     """The product's flagship composition (VERDICT r10 #6), one drive:
     CDC envelope events --availableNow stream--> upsert snapshot
-    --per-batch generation publish--> generation view --corpus build
-    (NB maintainer's model)--> shard manifest, equal to the batch
-    build's manifest from the raw parquet.
+    --per-batch generation publish--> generation view --corpus build-->
+    shard manifest, equal to the batch build's manifest from the raw
+    parquet.
 
     The CDC leg is REAL work, not a pass-through: stale earlier
     versions of doc_id%7 documents arrive in the same replay (the
@@ -268,7 +221,6 @@ def test_cdc_stream_to_corpus_build_end_to_end(spark, tmp_path):
         _CB_CAPACITY,
     )
     from snowflake_cdc_spark.sinks.parquet_sink import ParquetSnapshotSink
-    from snowflake_cdc_spark.streaming.nb_stream import NbClassifierMaintainer
     from snowflake_cdc_spark.streaming.pipeline import CdcPipeline
 
     docs = _t(spark, SF_SMOKE, "documents").select(
@@ -347,17 +299,6 @@ def test_cdc_stream_to_corpus_build_end_to_end(spark, tmp_path):
     assert store_docs.filter(F.col("doc_id") >= 5_000_000).count() == 0
     assert store_docs.count() == docs.count()
 
-    # NB maintainer fed from the SAME consistent cut, in micro-batches
-    seed = (
-        _split(spark, SF_SMOKE, docs=store_docs)
-        .filter(F.col("split") == "val")
-        .select("doc_id", "pos", "text")
-    )
-    maint = NbClassifierMaintainer(str(tmp_path / "nb_state"))
-    maint.process_batch(seed.filter(F.col("doc_id") % 2 == 0), batch_id=0)
-    maint.process_batch(seed.filter(F.col("doc_id") % 2 == 1), batch_id=1)
-    lr, k = maint.model(spark)
-
     def manifest(stages):
         return sorted(
             map(
@@ -372,9 +313,7 @@ def test_cdc_stream_to_corpus_build_end_to_end(spark, tmp_path):
             )
         )
 
-    through_cdc = manifest(
-        _corpus_stages(spark, SF_SMOKE, lr=lr, k=k, docs=store_docs)
-    )
+    through_cdc = manifest(_corpus_stages(spark, SF_SMOKE, docs=store_docs))
     batch = manifest(_corpus_stages(spark, SF_SMOKE))
     assert through_cdc == batch
 

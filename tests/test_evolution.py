@@ -148,3 +148,58 @@ def test_seq_tie_backfill_wins(spark, drift_raw, tmp_path):
     after = sink.read(spark, "ORDERS")
     assert "o_comment" in after.columns
     assert after.filter(F.col("o_comment").isNull()).count() == 0
+
+
+def test_e3_scanned_first_seen_bounds_the_backfill(
+    spark, drift_raw, tmp_path, monkeypatch
+):
+    """With an event-time column, reconcile finds the drifted column's
+    first-seen time with one scan of the raw zone and backfills only
+    from there (minus the pad). The snapshot equals the one a full
+    InputStart replay of the same zone produces."""
+    from datetime import datetime
+
+    from snowflake_cdc_spark.streaming import evolution
+
+    path, median = drift_raw
+    base = datetime(2024, 1, 1)
+    zone = str(tmp_path / "zone")
+    spark.read.option("mergeSchema", "true").parquet(path).withColumn(
+        "event_time", F.lit(base) + F.make_interval(secs=F.col("seq").cast("double"))
+    ).coalesce(2).write.parquet(zone)
+
+    horizons = []
+    real_backfill = evolution.backfill
+
+    def spy(spark_, pipeline, raw_path, first_seen, ts_col, **kw):
+        horizons.append(first_seen)
+        return real_backfill(spark_, pipeline, raw_path, first_seen, ts_col, **kw)
+
+    monkeypatch.setattr(evolution, "backfill", spy)
+
+    def run(name, ts_col):
+        pipe, sink = make_pipeline(spark, tmp_path / name)
+        pipe.materialize_batch(spark.read.parquet(path.replace("gen*", "gen0")))
+        meta = Catalog.from_columns_csv(COLUMNS_CSV).get("tpch.orders")
+        new = reconcile(spark, pipe, sink, meta, "ORDERS", zone, ts_col=ts_col)
+        assert new == ["o_comment"]
+        return sink.read(spark, "ORDERS")
+
+    bounded = run("bounded", "event_time")
+    full = run("full", None)
+
+    ev = spark.read.parquet(zone)
+    first_comment = (
+        ev.filter(F.col("data.row.o_comment").isNotNull())
+        .agg(F.min("event_time"))
+        .first()[0]
+    )
+    assert horizons == [first_comment]
+    assert first_comment > ev.agg(F.min("event_time")).first()[0]
+
+    cols = sorted(bounded.columns)
+    assert cols == sorted(full.columns)
+    key = lambda t: tuple((v is None, v) for v in t)  # noqa: E731
+    assert sorted(map(tuple, bounded.select(cols).collect()), key=key) == sorted(
+        map(tuple, full.select(cols).collect()), key=key
+    )

@@ -13,7 +13,6 @@ from snowflake_cdc_spark.operators.multimodal import (
     sample_frames,
 )
 from snowflake_cdc_spark.sources.io import read_table
-from snowflake_cdc_spark.streaming.dedup_stream import dedup_stream
 from tests.conftest import SF_SMOKE
 
 
@@ -52,27 +51,6 @@ def test_frame_sampling_one_to_n(spark):
         media.filter(F.col("media_id") == per[0].media_id).collect()[0].payload
     )
     assert joined == original[: len(joined)]
-
-
-def test_dedup_stream_batch_and_stream_agree(spark, tmp_path):
-    events = read_table(spark, SF_SMOKE, "events").select("ts", "user_id", "event_type")
-    doubled = events.unionByName(events)  # every row duplicated
-    src = str(tmp_path / "src")
-    doubled.coalesce(2).write.parquet(src)
-
-    batch = dedup_stream(doubled, ["user_id", "event_type"]).count()
-
-    stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
-    out = dedup_stream(stream, ["user_id", "event_type"])
-    counts = []
-    q = (
-        out.writeStream.foreachBatch(lambda df, _: counts.append(df.count()))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    assert sum(counts) == batch  # stream dedup state matches global dedup
 
 
 def test_decode_stub_raises_without_codec_lib():

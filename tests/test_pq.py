@@ -216,88 +216,3 @@ class TestIvfPq:
         row = idx.pq.codes.select("vec_id", "cell_id", "code").first()
         assert 0 <= row.cell_id < 16 and len(row.code) == 8
 
-
-class TestCodebookDrift:
-    """VERDICT r03 #5: index lifecycle monitoring — frozen-codebook
-    maintenance must NOTICE embedding-distribution drift (rising
-    quantization error) and recommend a rebuild."""
-
-    def test_flags_distribution_shift(self, spark):
-        from snowflake_cdc_spark.operators.pq import CodebookDriftMonitor
-
-        emb = _emb(spark)
-        idx = build_pq(emb, m=8, k=16)
-        monitor = CodebookDriftMonitor(idx, threshold_ratio=2.0)
-        # in-distribution batch: the corpus the codebooks trained on
-        m1 = monitor.encode_observed(emb, 0)
-        assert not m1.rebuild_recommended and m1.ratio < 2.0
-        assert m1.n_vectors == emb.count() and m1.baseline_qerr > 0
-        # drifted batch: scaled + shifted embeddings — codes still
-        # well-defined, but error blows past the baseline
-        drifted = emb.withColumn(
-            "embedding", F.transform("embedding", lambda x: x * 5.0 + 3.0)
-        )
-        m2 = monitor.encode_observed(drifted, 1)
-        assert m2.rebuild_recommended and m2.ratio > 2.0
-        assert m2.mean_qerr > m1.mean_qerr
-        assert [m.batch_id for m in monitor.metrics] == [0, 1]
-
-    def test_foreachbatch_maintenance_writes_once_and_records(self, spark, tmp_path):
-        """The monitor rides the streaming index-maintenance path: one
-        encode per batch feeds BOTH the appended codes and the health
-        metric; codes equal the one-shot batch encode."""
-        from snowflake_cdc_spark.operators.pq import CodebookDriftMonitor
-
-        emb = _emb(spark)
-        idx = build_pq(emb, m=4, k=16)
-        monitor = CodebookDriftMonitor(idx)
-        batch_codes = {
-            (r.vec_id, tuple(r.code))
-            for r in idx.codes.select("vec_id", "code").collect()
-        }
-
-        src = str(tmp_path / "vecs")
-        emb.withColumn("__c", F.col("vec_id") % 2).repartition(2, "__c").drop(
-            "__c"
-        ).write.parquet(src)
-        out = str(tmp_path / "codes")
-
-        def maintain(batch_df, batch_id):
-            monitor.encode_observed(
-                batch_df,
-                batch_id,
-                write=lambda enc: enc.select("vec_id", "code", "qerr")
-                .write.mode("append")
-                .parquet(out),
-            )
-
-        q = (
-            spark.readStream.schema(spark.read.parquet(src).schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(maintain)
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-
-        written = spark.read.parquet(out)
-        assert {
-            (r.vec_id, tuple(r.code)) for r in written.collect()
-        } == batch_codes
-        assert written.filter(F.col("qerr") < 0).count() == 0
-        assert len(monitor.metrics) >= 2  # one per micro-batch
-        assert all(not m.rebuild_recommended for m in monitor.metrics)
-        assert sum(m.n_vectors for m in monitor.metrics) == emb.count()
-
-    def test_rejects_index_without_baseline(self, spark):
-        import pytest
-
-        from snowflake_cdc_spark.operators.pq import CodebookDriftMonitor
-
-        emb = _emb(spark)
-        idx = build_pq(emb, m=4, k=16)
-        idx.extras.pop("train_qerr")
-        with pytest.raises(ValueError, match="train_qerr"):
-            CodebookDriftMonitor(idx)

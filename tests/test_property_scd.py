@@ -1,18 +1,13 @@
 """Property-based verification of SCD2 (hypothesis): the engine must
-agree with a 15-line pure-Python replay for ANY change log, and the
-incremental maintainer must agree with the batch rebuild for ANY
-partitioning of that log into micro-batches — delivery order is not a
-correctness input (same doctrine as test_property_upsert.py)."""
+agree with a 15-line pure-Python replay for ANY change log."""
 
 from __future__ import annotations
 
 from conftest import prop_settings
-from hypothesis import given, settings
+from hypothesis import given
 from hypothesis import strategies as st
 
 from snowflake_cdc_spark.operators.scd import scd2_from_changes
-from snowflake_cdc_spark.sinks.parquet_sink import ParquetSnapshotSink
-from snowflake_cdc_spark.streaming.scd_stream import Scd2Maintainer
 
 SCHEMA = "k int, v string, ts int, seq long"
 
@@ -73,26 +68,3 @@ def test_scd2_matches_python_replay(spark, log):
         )
     )
     assert got == python_oracle(log)
-
-
-@prop_settings(6)
-@given(log=change_logs(), batch_size=st.integers(5, 12), data=st.data())
-def test_incremental_equals_batch_for_any_split(
-    spark, tmp_path_factory, log, batch_size, data
-):
-    # shuffle delivery order, then split into micro-batches
-    order = data.draw(st.permutations(range(len(log))))
-    shuffled = [log[i] for i in order]
-    m = Scd2Maintainer(
-        ParquetSnapshotSink(str(tmp_path_factory.mktemp("scd"))),
-        "dim",
-        ["k"],
-        "v",
-        "ts",
-        "seq",
-    )
-    for bid, lo in enumerate(range(0, len(shuffled), batch_size)):
-        m.process_batch(
-            spark.createDataFrame(shuffled[lo : lo + batch_size], SCHEMA), bid
-        )
-    assert _canon(m.snapshot(spark)) == python_oracle(log)

@@ -1,5 +1,5 @@
-"""Snapshot-sink maintenance: time travel, vacuum, compaction — plus the
-watermarked windowed aggregation's stream/batch parity."""
+"""Snapshot-sink maintenance: time travel, vacuum, compaction, writer
+concurrency and automatic maintenance inside a stream."""
 
 from __future__ import annotations
 
@@ -10,9 +10,7 @@ from pyspark.sql import functions as F
 from snowflake_cdc_spark.plans.spec import PipelineSpec
 from snowflake_cdc_spark.sinks.parquet_sink import ParquetSnapshotSink
 from snowflake_cdc_spark.sources.cdc import cdc_events_nested
-from snowflake_cdc_spark.sources.io import read_table
 from snowflake_cdc_spark.streaming.pipeline import CdcPipeline
-from snowflake_cdc_spark.streaming.windows import windowed_counts
 from tests.conftest import SF_SMOKE
 
 import pytest
@@ -107,39 +105,6 @@ def test_zorder_compaction_clusters_and_preserves(spark, tmp_path):
         for r in sink.read(spark, "ORDERS").collect()
     )
     assert after == before
-
-
-def test_watermarked_window_stream_batch_parity(spark, tmp_path):
-    events = read_table(spark, SF_SMOKE, "events").select("ts", "event_type")
-    src = str(tmp_path / "src")
-    events.coalesce(3).write.parquet(src)
-
-    batch = {
-        (str(r.win_start), r.event_type): r.n
-        for r in windowed_counts(events, group_cols=["event_type"]).collect()
-    }
-
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    got = {}
-
-    def sink_batch(df, _):
-        for r in df.collect():
-            got[(str(r.win_start), r.event_type)] = r.n
-
-    q = (
-        windowed_counts(stream, group_cols=["event_type"])
-        .writeStream.outputMode("update")
-        .foreachBatch(sink_batch)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    assert got == batch
 
 
 class TestWriterConcurrency:
