@@ -13,7 +13,8 @@ pure FUNCTION OF THE SET:
 
 - **mergeable, exactly**: bottom-k of a union is the bottom-k of the
   two bottom-k's (associative, commutative, idempotent — the same
-  merge law as KMV), which is what the next point relies on;
+  merge law as KMV, tested over arbitrary splits), which is what the
+  next point relies on;
 - **distributed for free**: ``orderBy(md5(id)).limit(k)`` compiles to
   TakeOrderedAndProject — per-partition bottom-k summaries + a driver
   merge. Spark's own top-k machinery IS the sketch pipeline; no

@@ -58,6 +58,28 @@ def prop_settings(max_examples: int) -> settings:
     return settings(max_examples=max_examples)
 
 
+def scd2_land_batch(sink, batch, table, key_cols, attr_col, ts_col, seq_col) -> int:
+    """Land one change micro-batch and republish its SCD2 history.
+
+    The change log is the sink table ``<table>__log``, merged on
+    ``seq_col``, so a redelivered batch leaves it unchanged. The history
+    is rebuilt from the whole log with the batch operator and written as
+    the next version of ``table``, whose number is returned."""
+    from pyspark.sql import functions as F
+
+    from snowflake_cdc_spark.operators.scd import scd2_from_changes
+
+    log = f"{table}__log"
+    changes = batch.select(*key_cols, attr_col, ts_col, seq_col)
+    sink.merge(
+        changes.withColumn("is_delete", F.lit(False)), log, [seq_col], seq_col=seq_col
+    )
+    history = scd2_from_changes(
+        sink.read(batch.sparkSession, log), key_cols, attr_col, ts_col, seq_col
+    )
+    return sink.overwrite(history, table)
+
+
 def pytest_collection_modifyitems(items):
     """Collection-time gate (ADVICE r05): the ci profile's
     max_examples=1 is a sentinel FLOOR, so a bare ``@given`` without an

@@ -1,6 +1,6 @@
 """Deterministic mergeable quantile sketch
 (operators/quantile_sketch.py): the sample against a reference bottom-k,
-rank-interval accuracy vs the DKW bound, tie/duplicate handling, and
+exact merge law of the samples over arbitrary splits, rank-interval accuracy vs the DKW bound, tie/duplicate handling, and
 small-sample degenerate cases."""
 
 from __future__ import annotations
@@ -35,6 +35,44 @@ def _ref_bottomk(rows, k=K):
         (hashlib.md5(pk.encode()).hexdigest(), v) for pk, v in rows
     )
     return keyed[:k]
+
+
+def _merge(a, b, k=K):
+    """Merge two samples' (h, v) pairs: bottom-k of their set union."""
+    return sorted(set(a) | set(b))[:k]
+
+
+def _sample(spark, rows):
+    return sorted(
+        (r.h, r.v) for r in bottomk_sample(_df(spark, rows), "v", "pk", K).collect()
+    )
+
+
+class TestMergeLaw:
+    @prop_settings(12)
+    @given(
+        n=st.integers(1, 60),
+        cut=st.integers(1, 59),
+        seed=st.integers(0, 10**6),
+    )
+    def test_sketch_of_union_equals_merge_of_sketches(self, spark, n, cut, seed):
+        rng = random.Random(seed)
+        rows = [(f"id{i}", rng.randint(0, 1000)) for i in range(n)]
+        cut = min(cut, n)
+        a, b = rows[:cut], rows[cut:]  # b may be empty: merge vs empty
+        merged = _merge(_sample(spark, a), _sample(spark, b))
+        assert merged == _sample(spark, rows) == _ref_bottomk(rows)
+
+    def test_merge_associative_and_idempotent(self, spark):
+        rows = [(f"id{i}", i * 7 % 101) for i in range(40)]
+        parts = [rows[:10], rows[10:25], rows[25:]]
+        samples = [_sample(spark, p) for p in parts]
+        left = _merge(_merge(samples[0], samples[1]), samples[2])
+        right = _merge(samples[0], _merge(samples[1], samples[2]))
+        again = _merge(left, left)  # idempotent
+        want = _ref_bottomk(rows)
+        for m in (left, right, again):
+            assert m == want
 
 
 class TestSample:
