@@ -28,9 +28,6 @@ class TableMeta:
     def primary_key_columns(self) -> list[str]:
         return [c.name for c in self.columns if c.is_primary_key]
 
-    def column_names_ci(self) -> set[str]:
-        return {c.name.lower() for c in self.columns}
-
 
 class Catalog:
     """In-memory catalog keyed by lower-cased full table name."""

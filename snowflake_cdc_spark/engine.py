@@ -124,6 +124,3 @@ class GenerationView:
                 f"run after prune_generations, from the writer's "
                 f"maintenance turn)"
             ) from e
-
-    def to_dict(self) -> dict[str, DataFrame]:
-        return {t: self.table(t) for t in self.tables()}

@@ -242,12 +242,3 @@ def connected_components_star(
         "node", F.col("node").alias("component")
     )
     return parents.union(roots)
-
-
-def dedup_representatives(
-    pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b"
-) -> DataFrame:
-    """From near-dup pairs, return (node, component): keep rows whose id
-    equals their component to retain exactly one document per cluster;
-    anti-join the rest away."""
-    return connected_components(pairs, src=id_a, dst=id_b)

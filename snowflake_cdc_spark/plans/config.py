@@ -117,21 +117,21 @@ def pipeline_from_config(spark, cfg: dict | str, sink=None):
           "sink": {"root": "/warehouse"},
           "fail_on_write_error": false,
           "quarantine_dir": "/warehouse/_quarantine",
-          "maintenance": {"every_n_batches": 10, "target_files": 8,
-                          "keep_versions": 2},
-          "convergence": {"log_dir": "/warehouse/_convergence"}
+          "maintenance": {"keep_versions": 2, "keep_generations": 8},
+          "convergence": {}
         }
 
-    ``convergence`` (round 8): an OBJECT enables a ``ConvergenceMonitor``
-    wired into the pipeline (``{}`` for in-memory ledger only;
-    ``log_dir`` adds the parquet ledger); ``false``/``null``/omitted
-    disables it; any other truthy non-object is a config error. The pipeline's wiring-time
+    ``maintenance``: the ``MaintenancePolicy`` retention run after every
+    batch. ``convergence`` (round 8): ``{}`` enables a
+    ``ConvergenceMonitor`` wired into the pipeline;
+    ``false``/``null``/omitted disables it; anything else (a non-empty
+    object included) is a config error. The pipeline's wiring-time
     ``keep_versions >= 2`` check applies — a config combining
     convergence with ``keep_versions: 1`` fails fast here, not
     mid-stream.
 
-    ``sink`` may be passed explicitly (any sink object) to override the
-    config's local-parquet sink."""
+    ``sink`` may be passed explicitly (a ``ParquetSnapshotSink`` or
+    subclass) to override the config's local-parquet sink."""
     from snowflake_cdc_spark.sinks.parquet_sink import ParquetSnapshotSink
     from snowflake_cdc_spark.streaming.pipeline import (
         CdcPipeline,
@@ -157,17 +157,16 @@ def pipeline_from_config(spark, cfg: dict | str, sink=None):
         maint = MaintenancePolicy(**cfg["maintenance"])
     conv = None
     conv_cfg = cfg.get("convergence")
-    if isinstance(conv_cfg, dict):
+    if conv_cfg == {}:
         from snowflake_cdc_spark.streaming.convergence import (
             ConvergenceMonitor,
         )
 
-        conv = ConvergenceMonitor(sink, log_dir=conv_cfg.get("log_dir"))
+        conv = ConvergenceMonitor(sink)
     elif conv_cfg:
         raise ValueError(
-            "pipeline config 'convergence' must be an object "
-            '({"log_dir": ...}) or false/omitted to disable; got '
-            f"{conv_cfg!r}"
+            "pipeline config 'convergence' must be {} to enable or "
+            f"false/omitted to disable; got {conv_cfg!r}"
         )
     return CdcPipeline(
         spark,

@@ -656,15 +656,16 @@ class ParquetSnapshotSink:
         zorder_by: list[str] | None = None,
     ) -> int:
         """Rewrite the current snapshot into ``target_files`` files — the
-        small-file compaction every micro-batch MERGE sink needs (each
-        merge writes shuffle.partitions files; hundreds of batches →
-        thousands of small files → scan death at scale).
+        manual OPTIMIZE. The pipeline never calls it: each ``merge``
+        rewrites the whole table into as many files as AQE's
+        post-shuffle coalescing leaves, so merges do not pile up small
+        files.
 
         ``zorder_by``: also recluster along the Morton curve of these
         columns (operators/zorder.py) so footer min/max stats prune scans
         on every listed column — the OPTIMIZE ... ZORDER BY posture.
-        Merges append in arrival order, so clustering decays with every
-        batch; compaction is exactly the place to restore it."""
+        The next merge writes the table in its shuffle's hash order, so
+        the clustering lasts until then."""
         base_v = self.current_version(table)
         df = self._read_raw(spark, table)
         if zorder_by:

@@ -18,19 +18,6 @@ def read_cdc_json(spark: SparkSession, path: str, schema: T.StructType) -> DataF
     return spark.read.schema(schema).json(path)
 
 
-def read_cdc_json_stream(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Streaming read of the same zone (file-source micro-batches)."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.json(path)
-
-
 def parse_kafka_cdc(raw: DataFrame, schema: T.StructType) -> DataFrame:
     """Decode a Kafka-shaped frame (binary ``value`` column) into envelope
     rows: ``from_json(CAST(value AS STRING), schema)``.

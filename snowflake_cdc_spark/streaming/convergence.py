@@ -13,11 +13,8 @@ proven pieces:
   dashboard means by "removed").
 
 The monitor records the report per (table, batch): after batch N lands
-version v_N, it diffs (v_{N-1} → v_N) and appends one row per metric
-to an in-memory ledger plus (optionally) a parquet log under
-``log_dir/<table>/batch=<id>`` — overwrite-per-batch, so a
-checkpoint-restart replay rewrites the same rows (replay-safe without
-any read-back of earlier batches).
+version v_N, it diffs (v_{N-1} → v_N) and the pipeline appends one row
+per metric to the in-memory ``records`` ledger.
 
 Convergence reading: a CDC stream has CONVERGED onto its source when
 consecutive diffs go to zero (no adds, no removes, no changes) while
@@ -37,8 +34,6 @@ the same.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -51,35 +46,10 @@ __all__ = ["ConvergenceMonitor"]
 class ConvergenceMonitor:
     """Per-batch snapshot-to-snapshot change reports for CDC tables."""
 
-    def __init__(
-        self,
-        sink: ParquetSnapshotSink,
-        log_dir: str | None = None,
-    ) -> None:
+    def __init__(self, sink: ParquetSnapshotSink) -> None:
         self.sink = sink
-        self.log_dir = log_dir
         # (table, batch_id, from_version, to_version, metric, n)
         self.records: list[tuple[str, int, int, int, str, int]] = []
-
-    # ------------------------------------------------------------------ record
-
-    def record(
-        self,
-        spark: SparkSession,
-        table: str,
-        batch_id: int,
-        from_version: int,
-        to_version: int,
-        key_cols: list[str],
-    ) -> dict[str, int]:
-        """Diff two retained snapshot versions and log the report.
-        ``from_version < 0`` (first merge) diffs against the empty
-        relation — everything counts as added."""
-        rows = self.diff_records(
-            spark, table, batch_id, from_version, to_version, key_cols
-        )
-        self.records += rows
-        return {metric: n for *_, metric, n in rows}
 
     def diff_records(
         self,
@@ -90,10 +60,11 @@ class ConvergenceMonitor:
         to_version: int,
         key_cols: list[str],
     ) -> list[tuple[str, int, int, int, str, int]]:
-        """``record`` without the in-memory append: computes the report,
-        writes the parquet log, and returns the ledger rows. Safe to run
-        for several tables at once; ``CdcPipeline`` appends the rows to
-        ``records`` in spec order itself."""
+        """Diff two retained snapshot versions of ``table`` and return the
+        ledger rows, one per metric. ``from_version < 0`` (first merge)
+        diffs against the empty relation — everything counts as added.
+        Safe to run for several tables at once; ``CdcPipeline`` appends
+        the rows to ``records`` in spec order itself."""
         new = self.sink.read_version(spark, table, to_version)
         old = (
             new.limit(0)
@@ -101,34 +72,10 @@ class ConvergenceMonitor:
             else self.sink.read_version(spark, table, from_version)
         )
         report = table_diff(old, new, key_cols)
-        rows = [
+        return [
             (table, batch_id, from_version, to_version, r.metric, int(r.n))
             for r in sorted(report.collect(), key=lambda r: r.metric)
         ]
-        if self.log_dir:
-            out = spark.createDataFrame(
-                rows,
-                "table string, batch_id int, from_version int, "
-                "to_version int, metric string, n bigint",
-            )
-            out.coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(self.log_dir, table, f"batch={batch_id}")
-            )
-        return rows
-
-    # ------------------------------------------------------------------ reads
-
-    def log(self, spark: SparkSession) -> DataFrame:
-        """The full parquet ledger (requires ``log_dir``)."""
-        if not self.log_dir or not os.path.isdir(self.log_dir):
-            return spark.createDataFrame(
-                [],
-                "table string, batch_id int, from_version int, "
-                "to_version int, metric string, n bigint",
-            )
-        return spark.read.option("recursiveFileLookup", "true").parquet(
-            self.log_dir
-        )
 
     def churn_between_generations(
         self,
@@ -152,7 +99,7 @@ class ConvergenceMonitor:
         list. A table present in only one manifest diffs against the
         empty relation. Output: (table_name, metric, n) — one
         full-outer join + one aggregation per table, same cost class
-        as the per-batch ``record``.
+        as the per-batch ``diff_records``.
 
         Retention horizon (round 10): both generations must still be
         retained — after ``prune_generations`` (or the

@@ -23,7 +23,7 @@ from __future__ import annotations
 
 from datetime import timedelta
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from snowflake_cdc_spark.catalog import TableMeta
@@ -45,21 +45,6 @@ def widen_ddl(table: str, new_columns: list[tuple[str, str]]) -> list[str]:
         f"ALTER TABLE {table.upper()} ADD COLUMN IF NOT EXISTS {name.upper()} {sf_type}"
         for name, sf_type in new_columns
     ]
-
-
-def first_seen_time(
-    events: DataFrame, field_path: str, ts_col: str = "event_time"
-):
-    """Earliest event time at which the (new) field held data — the
-    get_first_field_time probe (add_output.py:264-274) as an aggregation.
-    Returns None when the field never held data (the reference crashes
-    here, TODO add_output.py:272)."""
-    row = (
-        events.filter(F.col(field_path).isNotNull())
-        .agg(F.min(ts_col).alias("first_seen"))
-        .collect()[0]
-    )
-    return row["first_seen"]
 
 
 def backfill(

@@ -41,7 +41,6 @@ from pyspark.sql.streaming import StreamingQuery
 
 from snowflake_cdc_spark.functions.strings import actual_full_table_name
 from snowflake_cdc_spark.operators.flatten import expand_struct
-from snowflake_cdc_spark.operators.upsert import latest_by_key
 from snowflake_cdc_spark.plans.spec import DeleteStrategy, PipelineSpec, StartPosition
 from snowflake_cdc_spark.sinks.parquet_sink import ParquetSnapshotSink
 from snowflake_cdc_spark.streaming.metrics import BatchMetric
@@ -49,32 +48,40 @@ from snowflake_cdc_spark.streaming.metrics import BatchMetric
 
 @dataclass(frozen=True)
 class MaintenancePolicy:
-    """Automatic snapshot maintenance (round 4, VERDICT r03 #7): every
-    micro-batch merge writes ``shuffle.partitions`` files and one new
-    snapshot version, so an unattended stream decays into thousands of
-    small files plus unbounded version history — scan death at scale.
-    ``compact``/``vacuum`` existed but were manual; this policy runs
-    them every ``every_n_batches`` batches inside the same foreachBatch
-    that did the merges (no separate scheduler, and the stream's
-    exactly-once story is untouched: compaction rewrites identical data
-    and vacuum only drops non-current versions).
+    """Retention for an unattended stream. Every micro-batch leaves one
+    more snapshot version per merged table and one more generation
+    manifest, so without retention disk grows by a table copy per batch.
+    The pipeline applies this policy after every published batch, inside
+    the same foreachBatch turn as the merges:
+    ``prune_generations(keep_generations)`` first, so the versions that
+    old manifests pin become vacuumable in the same turn, then
+    ``vacuum(table, keep_last=keep_versions)`` per target table. Both
+    only delete manifests and non-current version dirs, so the turn
+    rewrites no data and the stream's exactly-once story is untouched.
+    A table keeps at most ``keep_versions + keep_generations`` versions.
 
-    ``zorder_by``: optional per-target-table cluster columns — the
-    every-N compaction is exactly where Z-order clustering is restored
-    (merges append in arrival order, so clustering decays batch over
-    batch; see ``ParquetSnapshotSink.compact``)."""
+    There is no compaction step. Each merge rewrites the whole table
+    (copy-on-write) into as many files as AQE's post-shuffle coalescing
+    leaves, so small files never pile up across batches.
+    ``ParquetSnapshotSink.compact`` stays the manual OPTIMIZE, with
+    optional Z-order clustering.
 
-    every_n_batches: int = 10
-    target_files: int = 8
+    ``keep_generations`` also bounds how far back
+    ``at_generation`` and churn reports can read: reading a pruned
+    generation raises ``GenerationRetentionError``."""
+
     keep_versions: int = 2
-    zorder_by: dict[str, list[str]] | None = None
-    # generation-manifest retention (VERDICT r09 #2): manifests older
-    # than the newest ``keep_generations`` committed ones are pruned in
-    # the same maintenance turn, BEFORE vacuum — so vacuum's pin set
-    # (every version any retained manifest references) shrinks with
-    # retention instead of growing by one manifest per micro-batch.
-    # Reads of a pruned generation raise GenerationRetentionError.
     keep_generations: int = 8
+
+    def __post_init__(self) -> None:
+        # fail at wiring time, not in the first batch's maintenance turn
+        # (prune rejects 0; vacuum's keep_last=0 would keep everything)
+        if self.keep_versions < 1 or self.keep_generations < 1:
+            raise ValueError(
+                "MaintenancePolicy needs keep_versions >= 1 and "
+                f"keep_generations >= 1, got {self.keep_versions} and "
+                f"{self.keep_generations}"
+            )
 
 
 @dataclass
@@ -173,9 +180,8 @@ class CdcPipeline:
         self.write_errors: list[tuple[str, int, str]] = []  # (table, batch, err)
         self.dq_violations: list[tuple[str, int, int]] = []  # (table, batch, n)
         self.metrics: list[BatchMetric] = []  # per-(table, batch) merge stats
-        self._batches_applied = 0
-        # (table, batch_id, compacted_version, vacuumed_versions)
-        self.maintenance_events: list[tuple[str, int, int, list[int]]] = []
+        # (table, batch_id, vacuumed_versions)
+        self.maintenance_events: list[tuple[str, int, list[int]]] = []
 
     # ---- per-table transform (pure, testable) ---------------------------
 
@@ -309,11 +315,7 @@ class CdcPipeline:
         if first_error is not None:
             raise first_error
         self._publish_generation(batch_id)
-        self._batches_applied += 1
-        if (
-            self.maintenance is not None
-            and self._batches_applied % self.maintenance.every_n_batches == 0
-        ):
+        if self.maintenance is not None:
             self._run_maintenance(batch_id)
 
     def _materialize_target(
@@ -433,11 +435,8 @@ class CdcPipeline:
         (fail_on_write_error=False) enter the manifest at their
         unadvanced current version — still a consistent read of what
         the store actually holds."""
-        publish = getattr(self.sink, "publish_generation", None)
-        if publish is None:
-            return
         try:
-            publish(
+            self.sink.publish_generation(
                 {
                     spec.target_table: self.sink.current_version(spec.target_table)
                     for spec in self.specs
@@ -468,46 +467,35 @@ class CdcPipeline:
         return GenerationView(self.spark, self.sink, gen)
 
     def _run_maintenance(self, batch_id: int) -> None:
-        """Compact + vacuum every table snapshot (MaintenancePolicy).
-        Runs inside the foreachBatch turn, after all merges: the stream
-        is between commits, so no concurrent writer exists (the sink's
-        CAS would catch one loudly if it did). Failures follow the
-        ``fail_on_write_error`` policy — maintenance is a storage
-        optimization and must not take a permissive stream down."""
+        """Retention (MaintenancePolicy): prune old generation manifests,
+        then vacuum every target table. Runs inside the foreachBatch
+        turn, after the batch's publish: the stream is between commits,
+        so no concurrent writer exists (the sink's CAS would catch one
+        loudly if it did). No version changes here, so the batch's own
+        generation still pins every current version. Failures follow the
+        ``fail_on_write_error`` policy — retention must not take a
+        permissive stream down."""
         pol = self.maintenance
-        prune = getattr(self.sink, "prune_generations", None)
-        if prune is not None and pol.keep_generations:
-            # prune BEFORE vacuum: the versions old manifests pin become
-            # vacuumable in the same turn (retention in lockstep)
-            try:
-                prune(keep_generations=pol.keep_generations)
-            except Exception as e:  # noqa: BLE001 - policy decides
-                if self.fail_on_write_error:
-                    raise
-                self.write_errors.append(
-                    ("_generation", batch_id, f"prune failed: {e}")
-                )
-        for spec in self.specs:
-            table = spec.target_table
+        # prune BEFORE vacuum: the versions old manifests pin become
+        # vacuumable in the same turn (retention in lockstep)
+        try:
+            self.sink.prune_generations(keep_generations=pol.keep_generations)
+        except Exception as e:  # noqa: BLE001 - policy decides
+            if self.fail_on_write_error:
+                raise
+            self.write_errors.append(("_generation", batch_id, f"prune failed: {e}"))
+        for table in dict.fromkeys(spec.target_table for spec in self.specs):
             if not self.sink.exists(table):
                 continue
             try:
-                zo = (pol.zorder_by or {}).get(table)
-                v = self.sink.compact(
-                    self.spark, table, target_files=pol.target_files, zorder_by=zo
-                )
                 removed = self.sink.vacuum(table, keep_last=pol.keep_versions)
-                self.maintenance_events.append((table, batch_id, v, removed))
+                self.maintenance_events.append((table, batch_id, removed))
             except Exception as e:  # noqa: BLE001 - policy decides
                 if self.fail_on_write_error:
                     raise
                 self.write_errors.append(
                     (table, batch_id, f"maintenance failed: {e}")
                 )
-        # compaction advanced per-table versions: re-commit the
-        # generation so consistent readers follow (vacuum pins the
-        # previous generation's versions until this lands)
-        self._publish_generation(batch_id)
 
     # ---- entry points ----------------------------------------------------
 
@@ -676,14 +664,14 @@ def _replay_part(pipeline: CdcPipeline, spec: PipelineSpec, part: str) -> int:
         still_bad = still_bad.persist()
         still_bad.count()
     keys = pipeline._key_cols(spec)
-    reduced = latest_by_key(rows, keys, "seq")
-    # persist for the same reason as still_bad — merge() and the
-    # returned count both execute after the source files are gone
-    reduced = reduced.persist()
+    # the raw rows: the sink merge reduces its own input. Persist for
+    # the same reason as still_bad — merge() and the returned count both
+    # execute after the source files are gone
+    rows = rows.persist()
     try:
-        n_merged = reduced.count()
+        n_merged = rows.count()
         pipeline.sink.merge(
-            reduced,
+            rows,
             spec.target_table,
             key_cols=keys,
             seq_col="seq",
@@ -701,6 +689,6 @@ def _replay_part(pipeline: CdcPipeline, spec: PipelineSpec, part: str) -> int:
             shutil.rmtree(part)
         return n_merged
     finally:
-        reduced.unpersist()
+        rows.unpersist()
         if still_bad is not None:
             still_bad.unpersist()

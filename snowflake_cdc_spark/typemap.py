@@ -133,10 +133,6 @@ class ColumnSpec:
         )
 
     @property
-    def warehouse_name(self) -> str:
-        return self.name.upper()
-
-    @property
     def source_path(self) -> str:
         """Path inside the CDC envelope; ``[]`` suffix marks arrays
         (add_output.py:355-357)."""

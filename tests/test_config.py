@@ -55,6 +55,14 @@ def test_unknown_keys_raise():
         _expectation_from_dict({"type": "nonsense", "column": "x"})
 
 
+def test_maintenance_retention_must_keep_something():
+    from snowflake_cdc_spark.streaming.pipeline import MaintenancePolicy
+
+    for bad in ({"keep_versions": 0}, {"keep_generations": 0}):
+        with pytest.raises(ValueError, match="keep_versions >= 1"):
+            MaintenancePolicy(**bad)
+
+
 def test_pipeline_from_config_runs_end_to_end(spark, tmp_path):
     raw = str(tmp_path / "raw")
     cdc_events_nested(spark, SF_SMOKE).write.parquet(raw)
@@ -73,11 +81,7 @@ def test_pipeline_from_config_runs_end_to_end(spark, tmp_path):
         "sink": {"root": str(tmp_path / "wh")},
         "fail_on_write_error": False,
         "quarantine_dir": str(tmp_path / "q"),
-        "maintenance": {
-            "every_n_batches": 1,
-            "target_files": 4,
-            "keep_generations": 3,
-        },
+        "maintenance": {"keep_generations": 3},
     }
     # also exercise the file path form
     cfg_path = str(tmp_path / "pipeline.json")
@@ -92,7 +96,7 @@ def test_pipeline_from_config_runs_end_to_end(spark, tmp_path):
         (F.col("rn") == 1) & ~F.col("is_delete")
     )
     assert snap.count() == oracle.count()
-    # maintenance fired (every_n_batches=1) and compacted the snapshot
+    # retention ran after the batch's publish
     assert pipe.maintenance_events
     # the generation-retention knob reached the policy (round 10)
     assert pipe.maintenance.keep_generations == 3
@@ -111,19 +115,19 @@ def test_config_wires_convergence_monitor(spark, tmp_path):
             }
         ],
         "sink": {"root": str(tmp_path / "wh_c")},
-        "convergence": {"log_dir": str(tmp_path / "conv")},
+        "convergence": {},
     }
     pipe = pipeline_from_config(spark, cfg)
     assert pipe.convergence is not None
     pipe.run_batch(raw)
     # first batch: everything reports as added in the monitor's ledger
-    rows = {r.metric: r.n for r in pipe.convergence.log(spark).collect()}
+    rows = {m: n for *_, m, n in pipe.convergence.records}
     assert rows.get("rows_added", 0) > 0
 
     # convergence + keep_versions < 2 must fail at wiring time
     import pytest as _pytest
 
     bad = dict(cfg)
-    bad["maintenance"] = {"every_n_batches": 1, "keep_versions": 1}
+    bad["maintenance"] = {"keep_versions": 1}
     with _pytest.raises(ValueError, match="keep_versions"):
         pipeline_from_config(spark, bad)

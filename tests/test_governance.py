@@ -586,7 +586,8 @@ class TestQuarantineReplay:
         # full fix drains the quarantine completely
         pipe.dq_expectations = {"ORDERS": [in_range("o_totalprice", 0, 10**9)]}
         n2 = replay_quarantine(pipe, "ORDERS")
-        # replay counts are post latest_by_key reduction, so <= raw count
+        # replay counts are raw quarantined rows, each replayed at most
+        # once, so <= raw count
         assert n2 > 0 and n1 + n2 <= quarantined
         assert not os.path.isdir(qdir) or not any(
             d.startswith("dq_batch=") for d in os.listdir(qdir)

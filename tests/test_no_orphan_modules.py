@@ -3,10 +3,9 @@
 Walks the imports with ``ast`` (function-level imports included) from the
 program's entry points: the package ``__init__``/``__main__``,
 ``__spark_entry__.py``, every ``queries*.py``, ``bench.py``,
-``perfbench/*.py`` and ``tools/*.py`` except the one-off ``probe_*``
-scripts. A module that none of them reaches, and that is not on the
-public-API list below, is code only its own tests call: delete it with
-its tests, or wire it into a caller.
+``perfbench/*.py`` and ``tools/*.py``. A module that none of them
+reaches, and that is not on the public-API list below, is code only its
+own tests call: delete it with its tests, or wire it into a caller.
 
 ``find_orphans(root)`` takes the repo root, so it can be pointed at a
 copy of the tree.
@@ -55,9 +54,7 @@ def _entry_points(root: Path) -> list[Path]:
     files += sorted(pkg.glob("queries*.py"))
     files.append(root / "bench.py")
     files += sorted((root / "perfbench").glob("*.py"))
-    files += sorted(
-        p for p in (root / "tools").glob("*.py") if not p.name.startswith("probe_")
-    )
+    files += sorted((root / "tools").glob("*.py"))
     return [p for p in files if p.is_file()]
 
 
